@@ -1,5 +1,5 @@
 """Cardinality-consistent hashing: every sketchable value becomes an
-``xxhash64``-derived BIGINT, computed entirely JVM-side (codegen).
+``xxhash64``-derived BIGINT, computed entirely JVM-side.
 
 Why: Spark's Datasketches built-ins accept only INT/BIGINT/STRING/BINARY
 and (like Spark's plain ``hash``/``xxhash64``) treat a null array element
@@ -30,9 +30,12 @@ per-row sketch builder in ``sketch_codec.py``):
 * a **struct** hashes to ``xxhash64(STRUCT_SEED, f1_hash, ..., fn_hash)``
   — order-sensitive in the fields.
 
-Everything below compiles to built-in expressions (``xxhash64``,
-``aggregate``, ``transform``, ``map_entries``) and stays inside
-whole-stage codegen — no Python in the hot path.
+Everything below compiles to built-in JVM expressions (``xxhash64``,
+``aggregate``, ``transform``, ``map_entries``) — no Python in the hot
+path.  It is not all whole-stage codegen: the higher-order functions
+(``aggregate``, ``transform``) are interpreted, and under
+``hll_init_agg`` the hash is evaluated inside the ObjectHashAggregate,
+which has no whole-stage codegen.
 """
 
 from __future__ import annotations

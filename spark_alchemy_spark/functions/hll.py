@@ -3,8 +3,12 @@
 Re-expresses the reference's product surface (reference
 alchemy/.../hll/HLLFunctionRegistration.scala:8-18, DSL
 hll/HLLFunctions.scala:676-792) on top of Spark >=3.5's built-in
-Datasketches HLL expressions, keeping 100% of aggregation inside
-codegen'd Catalyst operators:
+Datasketches HLL expressions, keeping all aggregation in the JVM.  The
+sketch aggregates are TypedImperativeAggregates, so the physical plan
+runs them in ObjectHashAggregate: no whole-stage codegen, and a task
+falls back to sort-based aggregation past
+``spark.sql.objectHashAggregate.sortBased.fallbackThreshold`` (128)
+keys:
 
   ===========================  =====================================
   reference SQL name           engine implementation
@@ -169,7 +173,8 @@ def hll_init_collection(
 
 
 # ---------------------------------------------------------------------------
-# Aggregates (pure JVM: Datasketches TypedImperativeAggregate + codegen)
+# Aggregates (pure JVM: Datasketches TypedImperativeAggregate, planned as
+# ObjectHashAggregate, which has no whole-stage codegen)
 # ---------------------------------------------------------------------------
 
 
@@ -352,8 +357,8 @@ def register(spark) -> None:
       Note the UDAF forms materialize each group's values (no partial
       aggregation — a Spark grouped-agg UDF limitation); they are the
       SQL *compatibility* surface.  The DataFrame API
-      (``hll_init_agg``/``hll_merge`` above) stays on codegen'd JVM
-      aggregates and is the path for heavy pipelines.
+      (``hll_init_agg``/``hll_merge`` above) stays on JVM aggregates
+      with partial aggregation and is the path for heavy pipelines.
     """
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION hll_cardinality(sk BINARY) "

@@ -4,7 +4,8 @@ The reference's whole thesis is "the sketch itself is a first-class,
 persistable, re-mergeable column value" (reference docs/docs/index.md:
 20-22), delivered for one sketch family (HLL, hll/HLLFunctions.scala).
 This module extends the same algebra to the two Datasketches families
-Spark 4.1 ships natively, staying 100% inside codegen'd Catalyst:
+Spark 4.1 ships natively, staying 100% inside Catalyst's JVM
+expressions (ObjectHashAggregate for the sketch aggregates):
 
 * **Theta sketches** — distinct counting with *full set algebra*.
   Where the reference approximates intersections by inclusion-exclusion

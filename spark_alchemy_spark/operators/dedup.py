@@ -769,6 +769,17 @@ def topk_centroid_assign(
         for r in cents.collect()
     ]
     crows = sorted(cent_rows, key=lambda t: t[0])
+    id_t = df.schema[id_col].dataType.simpleString()
+    lt = (
+        "bigint"
+        if isinstance(cents, list)
+        else cents.schema["__list"].dataType.simpleString()
+    )
+    vec_part = f", {vec_col} array<double>" if keep_vec else ""
+    out_schema = f"{id_col} {id_t}{vec_part}, __list {lt}, __rk int"
+    if not crows:
+        # no centroids: the cross join of the expression form is empty
+        return df.sparkSession.createDataFrame([], out_schema)
     lists = np.array([t[0] for t in crows], dtype=np.int64)
     cm = np.array([t[1] for t in crows], dtype=np.float64)  # k x dim
     k, dim = cm.shape
@@ -825,16 +836,7 @@ def topk_centroid_assign(
                 cols = [id_col, vec_col, "__list", "__rk"]
             yield pd.DataFrame({c: out[c] for c in cols})
 
-    id_t = df.schema[id_col].dataType.simpleString()
-    lt = (
-        "bigint"
-        if isinstance(cents, list)
-        else cents.schema["__list"].dataType.simpleString()
-    )
-    vec_part = f", {vec_col} array<double>" if keep_vec else ""
-    return df.select(id_col, vec_col).mapInPandas(
-        assign, f"{id_col} {id_t}{vec_part}, __list {lt}, __rk int"
-    )
+    return df.select(id_col, vec_col).mapInPandas(assign, out_schema)
 
 
 def cosine_similarity(a, b) -> Column:

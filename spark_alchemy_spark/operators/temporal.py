@@ -30,6 +30,8 @@ recurrence.  All are property-tested equal to their exact forms
 
 from __future__ import annotations
 
+import operator
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -599,11 +601,18 @@ def longest_streak_bucketed(
         an, bn = pd.isna(a), pd.isna(b)
         return (an and bn) or (not an and not bn and a == b)
 
+    # the fold reads plain tuples by position: pandas renames a key
+    # such as "user id" or "_1" in itertuples' namedtuples
+    fold_cols = (
+        "n_rows", "n_runs", "p_v", "p_len", "s_v", "s_len", "s_t", "s_e",
+        "b_len", "b_v", "b_t", "b_e",
+    )
+
     def _merge_rows(rows) -> tuple:
-        """Fold one key's bucket summaries (bucket order) → (best_type,
-        best_streak, n_rows).  The exact per-key fold the grouped
-        applyInPandas version ran — unchanged logic, integer/object
-        values only (no float order involved)."""
+        """Fold one key's bucket summaries (bucket order, ``fold_cols``
+        tuples) → (best_type, best_streak, n_rows).  The exact per-key
+        fold the grouped applyInPandas version ran — unchanged logic,
+        integer/object values only (no float order involved)."""
         best = None  # (len, start_t, start_e, type)
 
         def candidate(run):
@@ -619,20 +628,21 @@ def longest_streak_bucketed(
 
         carry = None
         total = 0
-        for row in rows:
-            total += int(row.n_rows)
+        for (n_rows, n_runs, p_v, p_len, s_v, s_len, s_t, s_e,
+             b_len, b_v, b_t, b_e) in rows:
+            total += int(n_rows)
             joined = None
-            if carry is not None and _eq(carry[3], row.p_v):
-                joined = (carry[0] + int(row.p_len), carry[1], carry[2], carry[3])
+            if carry is not None and _eq(carry[3], p_v):
+                joined = (carry[0] + int(p_len), carry[1], carry[2], carry[3])
             else:
                 candidate(carry)
-            candidate((int(row.b_len), int(row.b_t), int(row.b_e), row.b_v))
-            if joined is not None and int(row.n_runs) == 1:
+            candidate((int(b_len), int(b_t), int(b_e), b_v))
+            if joined is not None and int(n_runs) == 1:
                 carry = joined  # whole bucket is one run: keep chaining
                 continue
             if joined is not None:
                 candidate(joined)
-            carry = (int(row.s_len), int(row.s_t), int(row.s_e), row.s_v)
+            carry = (int(s_len), int(s_t), int(s_e), s_v)
         candidate(carry)
         bt = best[3]
         if pd.isna(bt):
@@ -659,8 +669,10 @@ def longest_streak_bucketed(
             if len(pdf) == 0:
                 continue
             out_k, out_t, out_b, out_n = [], [], [], []
-            for row in pdf.itertuples(index=False):
-                kv = getattr(row, key)
+            ki = pdf.columns.get_loc(key)
+            fold = operator.itemgetter(*map(pdf.columns.get_loc, fold_cols))
+            for row in pdf.itertuples(index=False, name=None):
+                kv = row[ki]
                 if started and not _eq(kv, cur_key):
                     bt, bs, tot = _merge_rows(cur_rows)
                     out_k.append(cur_key)
@@ -669,7 +681,7 @@ def longest_streak_bucketed(
                     out_n.append(tot)
                     cur_rows = []
                 cur_key, started = kv, True
-                cur_rows.append(row)
+                cur_rows.append(fold(row))
             if out_k:
                 yield pd.DataFrame(
                     {

@@ -14,7 +14,10 @@ Pins the behaviors the r11 changes introduced:
   (ADVICE r10 item 3).
 * ``longest_streak_bucketed``'s single-pass partition fold equals the
   exact operator even when one key's bucket summaries straddle Arrow
-  batch boundaries (the mapInPandas rewrite's carry logic).
+  batch boundaries (the mapInPandas rewrite's carry logic), also for key
+  columns that are not Python identifiers.
+* ``topk_centroid_assign`` returns an empty assignment for an empty
+  centroid set, as the crossJoin form does.
 """
 
 import pytest
@@ -148,7 +151,9 @@ def test_longest_streak_udtf_null_user_group(spark):
 
 def test_longest_streak_bucketed_straddles_arrow_batches(spark):
     """The partition fold carries a running key across Arrow batch
-    boundaries — force 2-row batches so every key straddles."""
+    boundaries — force 2-row batches so every key straddles.  It reads
+    the key by position, so a key that is not a Python identifier, or
+    that pandas' itertuples renames (``_1``), works too."""
     from spark_alchemy_spark.operators.temporal import (
         longest_streak,
         longest_streak_bucketed,
@@ -170,19 +175,21 @@ def test_longest_streak_bucketed_straddles_arrow_batches(spark):
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", None)
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
     try:
-        bucketed = {
-            tuple(r)
-            for r in longest_streak_bucketed(
-                df, "user_id", "event_type", "ts", "event_id",
-                bucket=(F.col("ts") / F.lit(4)).cast("long"),
-            ).collect()
-        }
+        for key in ("user_id", "user id", "_1"):
+            bucketed = {
+                tuple(r)
+                for r in longest_streak_bucketed(
+                    df.withColumnRenamed("user_id", key),
+                    key, "event_type", "ts", "event_id",
+                    bucket=(F.col("ts") / F.lit(4)).cast("long"),
+                ).collect()
+            }
+            assert bucketed == exact, key
     finally:
         if old is None:
             spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
         else:
             spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-    assert bucketed == exact
 
 
 def _mk_clusters_r11(spark, dim=8, per=25):
@@ -386,6 +393,13 @@ def test_topk_centroid_assign_matches_window(spark):
         for r in topk_centroid_assign(odd, "__id", "__v", cdf, 2).collect()
     }
     assert got == {(1, 0, 1), (1, 1, 2), (2, 0, 1), (2, 1, 2)}
+
+    # no centroids: the crossJoin form yields no rows, and so does the
+    # kernel, for pre-collected rows and for a DataFrame alike
+    for none in ([], cdf.limit(0)):
+        empty = topk_centroid_assign(df, "__id", "__v", none, 2, keep_vec=True)
+        assert empty.columns == ["__id", "__v", "__list", "__rk"]
+        assert empty.collect() == []
 
 
 def test_train_ivf_centroids_parallel_sample_bit_identical(spark):
