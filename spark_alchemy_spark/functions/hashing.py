@@ -14,8 +14,8 @@ built-in functions:
   [a, null] != [null, a];  {} != {null: null};
   struct(null, a) != struct(a, null)     (FIXTURES.md F5)
 
-Design contract (used by both the JVM aggregate path and the Arrow/pandas
-per-row sketch builder in ``sketch_codec.py``):
+Design contract (used by both the JVM aggregate path and the Arrow UDF
+per-row sketch writer, ``sketch_codec.row_images``):
 
 * a **non-null primitive** hashes to ``xxhash64(value)`` (Spark seed 42);
 * a **null nested inside a collection/struct** hashes to ``NULL_HASH``
@@ -60,11 +60,6 @@ BINARY_SEED = 6364136223846793005
 
 def _col(c) -> Column:
     return c if isinstance(c, Column) else F.col(c)
-
-
-def is_direct_sketchable(dtype: T.DataType) -> bool:
-    """Types Spark's hll_sketch_agg accepts natively."""
-    return isinstance(dtype, (T.IntegerType, T.LongType, T.StringType, T.BinaryType))
 
 
 def is_primitive(dtype: T.DataType) -> bool:

@@ -13,10 +13,10 @@ keys:
   ===========================  =====================================
   reference SQL name           engine implementation
   ===========================  =====================================
-  hll_init                     Arrow pandas-UDF sketch-byte writer
-                               (no shuffle; sketch_codec.py) over the
-                               JVM cardinality hash
-  hll_init_collection          same, per collection element
+  hll_init                     Arrow UDF over the JVM cardinality
+                               hash; sketch_codec.row_images writes
+                               the bytes (no shuffle)
+  hll_init_collection          same, over the per-element hashes
   hll_init_agg                 hll_sketch_agg  (+ null-algebra guard)
   hll_init_collection_agg      hll_union_agg over per-row collection
                                sketches
@@ -45,17 +45,19 @@ from __future__ import annotations
 import functools
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa  # module-level: arrow_udf type hints resolve here
+import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.functions import arrow_udf
 
 from ..conf import (
     DEFAULT_RELATIVE_SD,
     precision_from_error,
 )
 from .hashing import cardinality_hash, element_hashes
+from .sketch_codec import row_images, union_images
 
 __all__ = [
     "hll_init",
@@ -101,43 +103,36 @@ def _lg_k(relative_sd: float | None) -> int:
 # ---------------------------------------------------------------------------
 
 
+def _split_rows(v: pa.Array, elements: bool):
+    """Lay an Arrow batch out for :func:`sketch_codec.row_images`:
+    ``(values, row index of each value, row NULL mask)``.
+
+    With ``elements`` each row is a list whose non-null elements are its
+    values (null elements are skipped, the reference's offer rule,
+    HLLFunctions.scala:107-108); otherwise each non-null row is one value.
+    """
+    v = v.combine_chunks() if isinstance(v, pa.ChunkedArray) else v
+    null_mask = pc.is_null(v).to_numpy(zero_copy_only=False)
+    if not elements:
+        return pc.drop_null(v), np.flatnonzero(~null_mask), null_mask
+    values, rows = pc.list_flatten(v), pc.list_parent_indices(v)
+    if values.null_count:
+        valid = pc.is_valid(values)
+        values, rows = values.filter(valid), rows.filter(valid)
+    return values, rows.to_numpy(zero_copy_only=False), null_mask
+
+
 @functools.lru_cache(maxsize=None)
-def _init_udf(lg_k: int):
-    """pandas UDF: nullable int64 hash -> serialized single-value sketch."""
-    from .sketch_codec import coupons_for_longs, serialize_coupons
+def _hashed_rows_udf(lg_k: int, elements: bool):
+    """Arrow UDF: JVM cardinality hashes (BIGINT, or ``array<bigint>``
+    element hashes when ``elements``) -> one sketch per row."""
 
-    @F.pandas_udf(T.BinaryType())
-    def init(hashes: pd.Series) -> pd.Series:
-        mask = hashes.notna()
-        out = pd.Series([None] * len(hashes), dtype=object)
-        if mask.any():
-            vals = hashes[mask].to_numpy(dtype=np.int64)
-            coupons = coupons_for_longs(vals)
-            out[mask] = [serialize_coupons((int(c),), lg_k) for c in coupons]
-        return out
+    @arrow_udf("binary")
+    def sketch_rows(v: pa.Array) -> pa.Array:
+        hashes, rows, null_mask = _split_rows(v, elements)
+        return row_images(hashes.to_numpy(zero_copy_only=False), rows, null_mask, lg_k)
 
-    return init
-
-
-@functools.lru_cache(maxsize=None)
-def _init_collection_udf(lg_k: int):
-    """pandas UDF: array<int64> of element hashes -> multi-value sketch."""
-    from .sketch_codec import coupons_for_longs, serialize_coupons
-
-    @F.pandas_udf(T.BinaryType())
-    def init_collection(hash_arrays: pd.Series) -> pd.Series:
-        out = []
-        for arr in hash_arrays:
-            if arr is None:
-                out.append(None)
-            elif len(arr) == 0:
-                out.append(serialize_coupons((), lg_k))
-            else:
-                coupons = coupons_for_longs(np.asarray(arr, dtype=np.int64))
-                out.append(serialize_coupons(coupons.tolist(), lg_k))
-        return pd.Series(out, dtype=object)
-
-    return init_collection
+    return sketch_rows
 
 
 def hll_init(col, relative_sd: float | None = None, dtype: T.DataType | None = None) -> Column:
@@ -146,12 +141,8 @@ def hll_init(col, relative_sd: float | None = None, dtype: T.DataType | None = N
     reference: HyperLogLogInitSimple, HLLFunctions.scala:192-218.
     ``dtype`` is required only for array/map/struct inputs.
     """
-    c = _col(col)
-    lg_k = _lg_k(relative_sd)
-    h = cardinality_hash(c, dtype)
-    return F.when(h.isNull(), F.lit(None).cast("binary")).otherwise(
-        _init_udf(lg_k)(F.coalesce(h, F.lit(0).cast("long")))
-    )
+    h = cardinality_hash(_col(col), dtype)
+    return _hashed_rows_udf(_lg_k(relative_sd), False)(h)
 
 
 def hll_init_collection(
@@ -164,12 +155,8 @@ def hll_init_collection(
     reference: HyperLogLogInitCollection, HLLFunctions.scala:294-321,
     offer logic :103-124.
     """
-    c = _col(col)
-    lg_k = _lg_k(relative_sd)
-    hashes = element_hashes(c, dtype)
-    return F.when(c.isNull(), F.lit(None).cast("binary")).otherwise(
-        _init_collection_udf(lg_k)(F.coalesce(hashes, F.array().cast("array<bigint>")))
-    )
+    hashes = element_hashes(_col(col), dtype)
+    return _hashed_rows_udf(_lg_k(relative_sd), True)(hashes)
 
 
 # ---------------------------------------------------------------------------
@@ -346,14 +333,19 @@ def register(spark) -> None:
     (expressions/NativeFunctionRegistration.scala:13-85, name list
     HLLFunctionRegistration.scala:8-18).
 
-    Two tiers:
+    Exactly these ten names are created: the nine, plus
+    ``agkn_cardinality``.  Two tiers:
 
     * ``hll_cardinality`` / ``hll_intersect_cardinality`` /
       ``hll_row_merge`` are SQL macros over the JVM built-ins — fully
       Catalyst-inlined, zero Python.
     * the init/aggregate/convert forms are Arrow UDFs / UDAFs hashing
-      with :mod:`pyxxh` (bit-identical to the JVM ``cardinality_hash``),
-      so SQL-built sketches MERGE correctly with DataFrame-built ones.
+      with :mod:`pyxxh` (bit-identical to the JVM ``cardinality_hash``).
+      ``hll_init`` / ``hll_init_collection`` / ``hll_init_agg`` /
+      ``hll_init_collection_agg`` write their bytes with the same
+      :func:`sketch_codec.row_images` as the DataFrame ``hll_init*``,
+      so the per-row forms are byte-identical to their DataFrame twins
+      and SQL-built sketches MERGE correctly with DataFrame-built ones.
       Note the UDAF forms materialize each group's values (no partial
       aggregation — a Spark grouped-agg UDF limitation); they are the
       SQL *compatibility* surface.  The DataFrame API
@@ -377,124 +369,41 @@ def register(spark) -> None:
         "RETURNS BINARY RETURN CASE WHEN a IS NULL THEN b WHEN b IS NULL THEN a "
         "ELSE hll_union(a, b, true) END"
     )
-    # Scalar per-row init over a pre-hashed BIGINT (pair with
-    # alchemy_hash(...) below for arbitrary primitives).
-    spark.udf.register("hll_init_hashed", _init_udf(_lg_k(None)))
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION alchemy_hash(x BIGINT) "
-        "RETURNS BIGINT RETURN CASE WHEN x IS NULL THEN CAST(NULL AS BIGINT) "
-        "ELSE xxhash64(x) END"
-    )
-
-    from pyspark.sql.functions import arrow_udf
 
     from .hashing import BINARY_SEED
     from .pyxxh import hash_arrow_values, xxh64_long
-    from .sketch_codec import (
-        serialize_coupons,
-        sketch_bytes_from_hashes_vec,
-        union_images,
-    )
 
     lg_k = _lg_k(None)  # error resolution at registration time
     bin_seed = xxh64_long(BINARY_SEED)
 
+    def sketch_group(values: pa.Array, is_null: bool) -> bytes | None:
+        # one group is one row of the per-row writer
+        hashes = hash_arrow_values(values, bin_seed)
+        rows = np.zeros(len(hashes), dtype=np.int64)
+        return row_images(hashes, rows, np.array([is_null]), lg_k)[0].as_py()
+
     @arrow_udf("binary")
     def _sql_init_agg(v: pa.Array) -> bytes:
-        hashes = hash_arrow_values(v, bin_seed)
-        if len(hashes) == 0:
-            return None  # empty / all-null group -> NULL sketch
-        return sketch_bytes_from_hashes_vec(hashes, lg_k)
+        return sketch_group(v, v.null_count == len(v))  # all-null -> NULL
 
     @arrow_udf("binary")
     def _sql_init_collection_agg(v: pa.Array) -> bytes:
         v = v.combine_chunks() if isinstance(v, pa.ChunkedArray) else v
-        if v.null_count == len(v):
-            return None  # only NULL collections -> NULL sketch
-        # flatten() drops null lists; null ELEMENTS are skipped by the
-        # hash layer — matching element_hashes / the reference's offers
-        return sketch_bytes_from_hashes_vec(
-            hash_arrow_values(v.flatten(), bin_seed), lg_k
-        )
+        # only NULL collections -> NULL sketch; flatten() drops null
+        # lists, null ELEMENTS are skipped by the hash layer
+        return sketch_group(v.flatten(), v.null_count == len(v))
 
     @arrow_udf("binary")
     def _sql_merge(v: pa.Array) -> bytes:
         return union_images(v.to_pylist())
 
-    @arrow_udf("binary")
-    def _sql_init(v: pa.Array) -> pa.Array:
-        import struct
+    def sql_rows_udf(elements: bool):
+        @arrow_udf("binary")
+        def sketch_rows(v: pa.Array) -> pa.Array:
+            values, rows, null_mask = _split_rows(v, elements)
+            return row_images(hash_arrow_values(values, bin_seed), rows, null_mask, lg_k)
 
-        from .sketch_codec import coupons_for_longs, serialize_coupons
-
-        # vectorized hash + coupon for the whole batch; per-row images
-        # share one constant single-coupon LIST preamble + zero tail
-        hashes = hash_arrow_values(v, bin_seed)
-        coupons = coupons_for_longs(hashes)
-        proto = serialize_coupons((0,), lg_k)
-        head, tail = proto[:8], proto[12:]
-        images = iter(
-            head + struct.pack("<i", int(c) - (1 << 32) if c >= (1 << 31) else int(c)) + tail
-            for c in coupons
-        )
-        out = [
-            None if is_null else next(images)
-            for is_null in pa.compute.is_null(v).to_pylist()
-        ]
-        return pa.array(out, type=pa.binary())
-
-    @arrow_udf("binary")
-    def _sql_init_collection(v: pa.Array) -> pa.Array:
-        # vectorized per-row sketches (r11, guide §4.2): hash EVERY
-        # element of the batch in one pass, group coupons per row with
-        # numpy, serialize one image per row.  The old form re-entered
-        # pa.array + the hash kernel once PER ROW (~2.1s over sf0.1
-        # documents vs ~0.3s here).  Byte-identical: per-row coupons
-        # come out sorted-unique exactly like np.unique in
-        # sketch_bytes_from_hashes_vec, and the dense-promotion branch
-        # is preserved (pinned by test_r11_kernels).
-        import numpy as np
-        import pyarrow.compute as pc
-
-        from .sketch_codec import _KEY_BITS, _KEY_MASK, coupons_for_longs, serialize_dense
-
-        v = v.combine_chunks() if isinstance(v, pa.ChunkedArray) else v
-        n = len(v)
-        flat = pc.list_flatten(v)  # non-null lists' elements, in order
-        rows_idx = pc.list_parent_indices(v)
-        if flat.null_count:  # null ELEMENTS are skipped (hash-layer rule)
-            valid = pc.is_valid(flat)
-            flat = flat.filter(valid)
-            rows_idx = rows_idx.filter(valid)
-        hashes = hash_arrow_values(flat, bin_seed)
-        rows = rows_idx.to_numpy(zero_copy_only=False)
-        coupons = coupons_for_longs(hashes)
-        order = np.lexsort((coupons, rows))
-        r, c = rows[order], coupons[order]
-        keep = np.ones(len(r), dtype=bool)
-        keep[1:] = (r[1:] != r[:-1]) | (c[1:] != c[:-1])
-        r, c = r[keep], c[keep]
-        bounds = np.searchsorted(r, np.arange(n + 1))
-        empty = serialize_coupons((), lg_k)
-        m = 1 << lg_k
-        null_mask = pc.is_null(v).to_pylist()
-        out = []
-        for i in range(n):
-            if null_mask[i]:
-                out.append(None)
-                continue
-            cs = c[bounds[i] : bounds[i + 1]]
-            if len(cs) == 0:
-                out.append(empty)
-            elif len(cs) * 4 > m:
-                regs = np.zeros(m, dtype=np.uint8)
-                slots = (cs & _KEY_MASK) & (m - 1)
-                vals = (cs >> _KEY_BITS).astype(np.uint8)
-                np.maximum.at(regs, slots, vals)
-                out.append(serialize_dense(lg_k, regs))
-            else:
-                out.append(serialize_coupons(cs.tolist(), lg_k))
-        return pa.array(out, type=pa.binary())
+        return sketch_rows
 
     @arrow_udf("binary")
     def _sql_convert(sk: pa.Array, impl_from: pa.Array, impl_to: pa.Array) -> pa.Array:
@@ -535,8 +444,8 @@ def register(spark) -> None:
     spark.udf.register("hll_init_agg", _sql_init_agg)
     spark.udf.register("hll_init_collection_agg", _sql_init_collection_agg)
     spark.udf.register("hll_merge", _sql_merge)
-    spark.udf.register("hll_init", _sql_init)
-    spark.udf.register("hll_init_collection", _sql_init_collection)
+    spark.udf.register("hll_init", sql_rows_udf(False))
+    spark.udf.register("hll_init_collection", sql_rows_udf(True))
     spark.udf.register("hll_convert", _sql_convert)
     # estimator over converted postgresql-hll bytes (what the reference's
     # interop test reads back from Postgres, PostgresInteropTest.scala:88-98)

@@ -7,22 +7,32 @@ but the reference also ships per-row scalar sketch builders
 (``hll_init`` / ``hll_init_collection``, reference
 alchemy/.../hll/HLLFunctions.scala:192-218, :294-321) for which Spark has
 no built-in.  Running an aggregate per row would shuffle the whole table;
-instead we build the serialized sketch bytes directly in an Arrow-batched
-pandas UDF.  The bytes are *bit-compatible* with Datasketches' updatable
-serialization (coupon LIST / SET modes), so the JVM built-ins can union
-and estimate them natively — verified by round-trip tests against
-``hll_sketch_agg`` output.
+instead :func:`row_images` builds the serialized sketch bytes of a whole
+Arrow batch at once.  It is the one per-row writer: the DataFrame and SQL
+``hll_init`` / ``hll_init_collection`` and the SQL ``hll_init_agg`` /
+``hll_init_collection_agg`` (one group = one row) all call it.  The
+bytes are *bit-compatible* with Datasketches' updatable serialization,
+so the JVM built-ins union and estimate them natively.
+``tests/test_sketch_writer.py::test_writer_matches_hll_sketch_agg``
+checks this: at every tested size, on both sides of each promotion
+boundary, the writer holds the same coupons (or the same registers) as
+``hll_sketch_agg`` over the same values.
 
 Format knowledge is from the public Apache Datasketches HLL
-serialization spec and datasketches-java (PreambleUtil.java); the writer
-emits:
+serialization spec and datasketches-java (PreambleUtil.java).  An image
+is in the mode a Datasketches sketch holding that many distinct coupons
+is in; :func:`coupon_image` is the one place that decides it:
 
-* LIST mode  (<= 7 coupons):  8-byte preamble + 2^lgArr coupon ints
-* SET  mode  (>  7 coupons): 12-byte preamble + open-hash coupon array
+* LIST  (<= 7 coupons): 8-byte preamble + 8 coupon ints;
+* SET   (lgK >= 8, 8 .. 3*2^(lgK-5) coupons): 12-byte preamble +
+  open-hash coupon array;
+* HLL_8 (more coupons, or >= 8 coupons at lgK < 8): 40-byte preamble +
+  2^lgK one-byte registers.
 
-Each distinct input value contributes one "coupon":
-``murmur3_128(value_bytes, seed=9001)`` -> ``slot = h0 & (2^26-1)``,
-``val = min(nlz(h1), 62) + 1``, ``coupon = (val << 26) | slot``.
+Each distinct input value contributes one "coupon": MurmurHash3 x64
+128 of the value's 8 little-endian bytes with seed 9001 gives
+``(h0, h1)``; ``slot = h0 & (2^26-1)``, ``val = min(nlz(h1), 62) + 1``,
+``coupon = (val << 26) | slot``.
 
 Inputs are always the engine's 64-bit cardinality hashes (see
 ``hashing.py``), serialized little-endian — matching how the JVM path
@@ -33,8 +43,12 @@ from __future__ import annotations
 
 import struct
 
+import numpy as np
+import pyarrow as pa
+
+from .agkn import coupons_to_registers, ds_parse
+
 MURMUR_SEED = 9001  # datasketches DEFAULT_UPDATE_SEED
-_MASK64 = (1 << 64) - 1
 _C1 = 0x87C37B91114253D5
 _C2 = 0x4CF5AD432745937F
 
@@ -47,83 +61,6 @@ _HLL_8 = 2  # tgtHllType used by Spark's built-ins
 
 _MODE_LIST = 0
 _MODE_SET = 1
-
-
-def _rotl(x: int, r: int) -> int:
-    return ((x << r) | (x >> (64 - r))) & _MASK64
-
-
-def _fmix(k: int) -> int:
-    k ^= k >> 33
-    k = (k * 0xFF51AFD7ED558CCD) & _MASK64
-    k ^= k >> 33
-    k = (k * 0xC4CEB9FE1A85EC53) & _MASK64
-    k ^= k >> 33
-    return k
-
-
-def murmur3_128(data: bytes, seed: int = MURMUR_SEED) -> tuple[int, int]:
-    """MurmurHash3 x64 128-bit (little-endian), as used by Datasketches."""
-    length = len(data)
-    h1 = seed & _MASK64
-    h2 = seed & _MASK64
-    nblocks = length // 16
-    for i in range(nblocks):
-        k1, k2 = struct.unpack_from("<qq", data, i * 16)
-        k1 &= _MASK64
-        k2 &= _MASK64
-        k1 = (k1 * _C1) & _MASK64
-        k1 = _rotl(k1, 31)
-        k1 = (k1 * _C2) & _MASK64
-        h1 ^= k1
-        h1 = _rotl(h1, 27)
-        h1 = (h1 + h2) & _MASK64
-        h1 = (h1 * 5 + 0x52DCE729) & _MASK64
-        k2 = (k2 * _C2) & _MASK64
-        k2 = _rotl(k2, 33)
-        k2 = (k2 * _C1) & _MASK64
-        h2 ^= k2
-        h2 = _rotl(h2, 31)
-        h2 = (h2 + h1) & _MASK64
-        h2 = (h2 * 5 + 0x38495AB5) & _MASK64
-    tail = data[nblocks * 16 :]
-    k1 = k2 = 0
-    tl = len(tail)
-    if tl > 8:
-        k2 = int.from_bytes(tail[8:], "little")
-        k2 = (k2 * _C2) & _MASK64
-        k2 = _rotl(k2, 33)
-        k2 = (k2 * _C1) & _MASK64
-        h2 ^= k2
-    if tl > 0:
-        k1 = int.from_bytes(tail[:8], "little")
-        k1 = (k1 * _C1) & _MASK64
-        k1 = _rotl(k1, 31)
-        k1 = (k1 * _C2) & _MASK64
-        h1 ^= k1
-    h1 ^= length
-    h2 ^= length
-    h1 = (h1 + h2) & _MASK64
-    h2 = (h2 + h1) & _MASK64
-    h1 = _fmix(h1)
-    h2 = _fmix(h2)
-    h1 = (h1 + h2) & _MASK64
-    h2 = (h2 + h1) & _MASK64
-    return h1, h2
-
-
-def _nlz64(x: int) -> int:
-    if x == 0:
-        return 64
-    return 64 - x.bit_length()
-
-
-def coupon_for_long(value: int) -> int:
-    """Coupon of one 64-bit input (matches datasketches update(long))."""
-    h0, h1 = murmur3_128(struct.pack("<q", value & _MASK64 if value >= 0 else value))
-    slot = h0 & _KEY_MASK
-    v = min(_nlz64(h1), 62) + 1
-    return (v << _KEY_BITS) | slot
 
 
 def _preamble(pre_ints: int, lg_k: int, lg_arr: int, flags: int, lo_field: int, mode: int) -> bytes:
@@ -141,7 +78,8 @@ def serialize_coupons(coupons, lg_k: int) -> bytes:
 
     LIST (count <= 7) mirrors a freshly updated heap sketch; larger
     counts use the coupon hash-set (SET mode) with the open-addressing
-    layout datasketches expects (stride probing on the low bits).
+    layout datasketches expects (stride probing on the low bits).  It
+    never promotes to dense registers: :func:`coupon_image` decides that.
     """
     cset = sorted(set(coupons))
     n = len(cset)
@@ -172,24 +110,12 @@ def serialize_coupons(coupons, lg_k: int) -> bytes:
     return head + count + body
 
 
-def sketch_bytes_from_hashes(hashes, lg_k: int) -> bytes:
-    """Serialized sketch holding every 64-bit hash in ``hashes``.
-
-    Empty input -> a valid empty sketch (cardinality 0), matching the
-    reference's "empty collection -> sketch of cardinality 0"
-    (HLLFunctions.scala:105-111).
-    """
-    return serialize_coupons((coupon_for_long(int(h)) for h in hashes), lg_k)
-
-
 # ---------------------------------------------------------------------------
-# Vectorized (numpy) coupon computation for the Arrow/pandas UDF hot path.
-# Inputs are always the engine's 64-bit hashes => fixed 8-byte messages, so
-# the murmur3 block loop degenerates to a branch-free tail + finalization
-# that maps 1:1 onto uint64 array ops.
+# Vectorized (numpy) coupon computation.  Inputs are always the engine's
+# 64-bit hashes => fixed 8-byte messages, so the murmur3 block loop
+# degenerates to a branch-free tail + finalization that maps 1:1 onto
+# uint64 array ops.
 # ---------------------------------------------------------------------------
-
-import numpy as np
 
 _U64 = np.uint64
 
@@ -220,7 +146,8 @@ def _nlz64_vec(x):
 
 
 def coupons_for_longs(values: "np.ndarray") -> "np.ndarray":
-    """Vectorized :func:`coupon_for_long` over an int64/uint64 array."""
+    """Coupon of each 64-bit input (datasketches ``update(long)``) over an
+    int64/uint64 array."""
     with np.errstate(over="ignore"):
         k1 = values.astype(np.int64).view(_U64)
         k1 = k1 * _U64(_C1)
@@ -282,11 +209,9 @@ def union_images(images, lg_k_out: int | None = None) -> bytes | None:
     26-bit coupon key, and the register value is precision-independent,
     so ``max`` over the slot preimage is the exact DS downsampling
     rule).  All-None input -> None (the reference's "no non-null input
-    -> NULL sketch" algebra); all-coupon input below the dense
-    break-even stays a coupon image.
+    -> NULL sketch" algebra); an all-coupon union takes the mode
+    :func:`coupon_image` gives its distinct coupons.
     """
-    from .agkn import coupons_to_registers, ds_parse
-
     coupon_parts: list[np.ndarray] = []
     dense_parts: list[tuple[int, np.ndarray]] = []
     lg = 32
@@ -310,9 +235,9 @@ def union_images(images, lg_k_out: int | None = None) -> bytes | None:
         if coupon_parts
         else np.empty(0, dtype=np.int64)
     )
+    if not dense_parts:
+        return coupon_image(coupons, lg)
     m = 1 << lg
-    if not dense_parts and len(coupons) * 4 <= m:
-        return serialize_coupons(coupons.tolist(), lg)
     acc = coupons_to_registers(coupons, lg)
     for k, regs in dense_parts:
         if k > lg:
@@ -321,19 +246,52 @@ def union_images(images, lg_k_out: int | None = None) -> bytes | None:
     return serialize_dense(lg, acc)
 
 
-def sketch_bytes_from_hashes_vec(hashes, lg_k: int) -> bytes:
-    """Vectorized :func:`sketch_bytes_from_hashes` for whole-group
-    batches (the SQL UDAF path): coupon image while small, dense HLL_8
-    once the register file is the smaller representation."""
-    arr = np.asarray(hashes, dtype=np.int64)
-    if len(arr) == 0:
-        return serialize_coupons((), lg_k)
-    coupons = np.unique(coupons_for_longs(arr))
-    m = 1 << lg_k
-    if len(coupons) * 4 > m:
-        regs = np.zeros(m, dtype=np.uint8)
-        slots = (coupons & _KEY_MASK) & (m - 1)
-        vals = (coupons >> _KEY_BITS).astype(np.uint8)
-        np.maximum.at(regs, slots, vals)
-        return serialize_dense(lg_k, regs)
+def coupon_image(coupons: np.ndarray, lg_k: int) -> bytes:
+    """Image of a set of distinct coupons, in the mode a Datasketches
+    sketch holding them is in.
+
+    This is the one place that decides coupon list vs dense registers.
+    The rule is datasketches-java's promotion rule: below lgK 8 the
+    8-slot LIST promotes straight to HLL on its 8th coupon; from lgK 8
+    the LIST becomes a SET, which grows at 3/4 load and promotes to HLL
+    once it holds more than ``3 * 2^(lgK-5)`` coupons (3/4 of its largest
+    array, ``2^(lgK-3)`` slots).
+    """
+    capacity = 7 if lg_k < 8 else 3 << (lg_k - 5)
+    if len(coupons) > capacity:
+        return serialize_dense(lg_k, coupons_to_registers(coupons, lg_k))
     return serialize_coupons(coupons.tolist(), lg_k)
+
+
+def row_images(
+    hashes: np.ndarray, rows: np.ndarray, null_mask: np.ndarray, lg_k: int
+) -> pa.Array:
+    """One sketch image per row of a batch.
+
+    ``hashes`` are the batch's 64-bit cardinality hashes, ``rows[i]`` is
+    the index of the row ``hashes[i]`` belongs to, and ``null_mask``
+    flags the NULL rows, which stay NULL.  A non-null row with no hashes
+    gets the empty sketch (cardinality 0, the reference's
+    empty-collection rule, HLLFunctions.scala:105-111).  Each row's
+    distinct coupons go through :func:`coupon_image`, except a row with
+    exactly one coupon (every ``hll_init`` row): that row is the one
+    constant single-coupon LIST image with its coupon word patched in.
+    """
+    coupons = coupons_for_longs(hashes)
+    order = np.lexsort((coupons, rows))
+    r, c = rows[order], coupons[order]
+    keep = np.ones(len(r), dtype=bool)
+    keep[1:] = (r[1:] != r[:-1]) | (c[1:] != c[:-1])
+    r, c = r[keep], c[keep]
+    bounds = np.searchsorted(r, np.arange(len(null_mask) + 1)).tolist()
+    one = serialize_coupons((0,), lg_k)
+    head, tail = one[:8], one[12:]
+    words = c.tolist()
+    out = [None] * len(null_mask)
+    for i in np.flatnonzero(~null_mask).tolist():
+        lo, hi = bounds[i], bounds[i + 1]
+        if hi - lo == 1:
+            out[i] = head + struct.pack("<I", words[lo]) + tail
+        else:
+            out[i] = coupon_image(c[lo:hi], lg_k)
+    return pa.array(out, type=pa.binary())

@@ -24,11 +24,13 @@ Equivalence with ``createDataFrame``:
 * row order — ``explode`` yields array elements in order from the one
   generating row.
 
-Types outside {integral, float, bool, string, null} and their
-array/struct/map compositions (timestamps, dates, decimals, binary)
-fall back to ``createDataFrame`` unchanged — no caller in this repo
-returns them from a driver-built frame today, and a silent lossy
-serialization would be worse than the 0.35s.
+Rows may be tuples, ``Row``s or dicts (matched by field name, a
+missing key reads NULL), as ``createDataFrame`` accepts.  Types outside
+{integral, float, bool, string, null} and their array/struct/map
+compositions (timestamps, dates, decimals, binary), and structs with
+duplicate field names, fall back to ``createDataFrame`` unchanged — no
+caller in this repo returns them from a driver-built frame today, and a
+silent lossy serialization would be worse than the 0.35s.
 """
 
 from __future__ import annotations
@@ -57,7 +59,11 @@ def _json_safe(dt) -> bool:
     if isinstance(dt, T.ArrayType):
         return _json_safe(dt.elementType)
     if isinstance(dt, T.StructType):
-        return all(_json_safe(f.dataType) for f in dt.fields)
+        # a JSON object keeps one value per key: duplicate names collapse
+        names = [f.name for f in dt.fields]
+        return len(set(names)) == len(names) and all(
+            _json_safe(f.dataType) for f in dt.fields
+        )
     if isinstance(dt, T.MapType):
         return isinstance(dt.keyType, T.StringType) and _json_safe(
             dt.valueType
@@ -73,7 +79,7 @@ def _encode(v, dt):
         return [_encode(x, dt.elementType) for x in v]
     if isinstance(dt, T.StructType):
         vals = (
-            [v[f.name] for f in dt.fields]
+            [v.get(f.name) for f in dt.fields]
             if isinstance(v, dict)
             else list(v)
         )
@@ -117,15 +123,7 @@ def local_frame(spark, rows, schema) -> "F.DataFrame":  # type: ignore[name-defi
         return empty
     if not _json_safe(dt):
         return spark.createDataFrame(rows, dt)
-    payload = json.dumps(
-        [
-            {
-                f.name: _encode(row[i], f.dataType)
-                for i, f in enumerate(dt.fields)
-            }
-            for row in rows
-        ]
-    )
+    payload = json.dumps([_encode(row, dt) for row in rows])
     parsed = (
         spark.range(1)
         .select(

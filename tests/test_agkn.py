@@ -20,7 +20,13 @@ from spark_alchemy_spark.functions.agkn import (
     ds_registers,
     ds_to_agkn,
 )
-from spark_alchemy_spark.functions.sketch_codec import sketch_bytes_from_hashes
+from spark_alchemy_spark.functions.sketch_codec import row_images
+
+
+def _image(hashes: np.ndarray, lg_k: int) -> bytes:
+    """The per-row writer's image of one row holding ``hashes``."""
+    rows = np.zeros(len(hashes), dtype=np.int64)
+    return row_images(hashes, rows, np.array([False]), lg_k)[0].as_py()
 
 
 def test_conversion_accuracy_10k(spark):
@@ -49,7 +55,7 @@ def test_register_roundtrip(spark, n, lgk):
             df.agg(F.hll_sketch_agg("h", F.lit(lgk)).alias("sk")).collect()[0]["sk"]
         )
     else:
-        sk = sketch_bytes_from_hashes(np.array([], dtype=np.int64), lgk)
+        sk = _image(np.array([], dtype=np.int64), lgk)
     lg, regs = ds_registers(sk)
     log2m, regwidth, back = agkn_registers(ds_to_agkn(sk))
     assert (log2m, regwidth) == (lg, 6)
@@ -60,7 +66,7 @@ def test_python_list_set_images_convert():
     """Our per-row writer's LIST and SET images convert too (hll_init
     output is convertible without touching the JVM)."""
     for n in (0, 3, 20, 500):
-        b = sketch_bytes_from_hashes(np.arange(n, dtype=np.int64) * 2654435761, 14)
+        b = _image(np.arange(n, dtype=np.int64) * 2654435761, 14)
         est = agkn_cardinality(ds_to_agkn(b))
         assert abs(est - n) <= max(2, 0.02 * n)
 

@@ -45,6 +45,8 @@ CASES = [
         [(2**62 + 1234567, -1.7976931348623157e308, 5e-324)],
         "big long, mn double, tiny double",
     ),
+    ([{"a": 1, "b": "x"}, {"b": None, "a": 2}, {"b": "y"}], "a long, b string"),
+    ([(1, 2)], "a long, a long"),
 ]
 
 

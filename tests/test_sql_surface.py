@@ -114,6 +114,27 @@ def test_string_binary_type_tag(registered):
     assert est == 2
 
 
+def test_register_creates_exactly_the_reference_names(spark):
+    """register() adds the nine reference names plus agkn_cardinality,
+    and nothing else (temporary functions are per session)."""
+    session = spark.newSession()
+    before = {f.name for f in session.catalog.listFunctions()}
+    hll.register(session)
+    after = {f.name for f in session.catalog.listFunctions()}
+    assert after - before == {
+        "hll_init",
+        "hll_init_collection",
+        "hll_init_agg",
+        "hll_init_collection_agg",
+        "hll_merge",
+        "hll_row_merge",
+        "hll_cardinality",
+        "hll_intersect_cardinality",
+        "hll_convert",
+        "agkn_cardinality",
+    }
+
+
 def test_pyxxh_matches_jvm_xxhash64(spark):
     from spark_alchemy_spark.functions.pyxxh import (
         xxh64_bytes,
@@ -165,13 +186,14 @@ def test_dense_image_readable_by_spark(spark):
     """serialize_dense output must be readable by Spark's JVM
     Datasketches expressions (estimate + union)."""
     from spark_alchemy_spark.functions.pyxxh import xxh64_longs
-    from spark_alchemy_spark.functions.sketch_codec import (
-        sketch_bytes_from_hashes_vec,
-        union_images,
-    )
+    from spark_alchemy_spark.functions.sketch_codec import row_images, union_images
+
+    def image(hashes, lg_k):
+        rows = np.zeros(len(hashes), dtype=np.int64)
+        return row_images(hashes, rows, np.array([False]), lg_k)[0].as_py()
 
     hashes = xxh64_longs(np.arange(5000, dtype=np.int64))
-    img = sketch_bytes_from_hashes_vec(hashes, 12)  # dense: 5000*4 > 4096
+    img = image(hashes, 12)  # dense: 5000 > 3 * 2^(12-5)
     assert len(img) == 40 + 4096
     est = (
         spark.createDataFrame([(img,)], "sk binary")
@@ -181,8 +203,8 @@ def test_dense_image_readable_by_spark(spark):
     assert abs(est - 5000) / 5000 < 0.05
 
     # mixed-precision union downsamples to the smaller lgK
-    a = sketch_bytes_from_hashes_vec(hashes[:3000], 12)
-    b = sketch_bytes_from_hashes_vec(xxh64_longs(np.arange(2000, 6000, dtype=np.int64)), 10)
+    a = image(hashes[:3000], 12)
+    b = image(xxh64_longs(np.arange(2000, 6000, dtype=np.int64)), 10)
     u = union_images([a, None, b])
     est = (
         spark.createDataFrame([(u,)], "sk binary")
