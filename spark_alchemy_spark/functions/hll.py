@@ -27,6 +27,9 @@ keys:
   hll_convert                  pure-Python byte transcoder (agkn.py)
   ===========================  =====================================
 
+The table holds for SQL text too: :func:`register` resolves each SQL
+name, at analysis time, to the expression its DataFrame function builds.
+
 Null algebra reproduced from the reference:
 * aggregates skip null inputs; an empty / all-null group yields a NULL
   sketch, not an empty one (HLLFunctions.scala:135-142, :158-159);
@@ -53,11 +56,13 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import arrow_udf
 
 from ..conf import (
+    DEFAULT_ERROR_CONF_KEY,
     DEFAULT_RELATIVE_SD,
     precision_from_error,
+    resolve_backend,
 )
 from .hashing import cardinality_hash, element_hashes
-from .sketch_codec import row_images, union_images
+from .sketch_codec import row_images
 
 __all__ = [
     "hll_init",
@@ -85,8 +90,6 @@ def _lg_k(relative_sd: float | None) -> int:
     (reference HLLFunctions.scala:24-61)."""
     if relative_sd is None:
         from pyspark.sql import SparkSession
-
-        from ..conf import DEFAULT_ERROR_CONF_KEY
 
         spark = SparkSession.getActiveSession()
         if spark is not None:
@@ -262,28 +265,37 @@ def hll_convert(col, impl_from: str = "DS", impl_to: str = "AGKN") -> Column:
     Supported: DS -> AGKN (postgresql-hll compatible), STRM -> AGKN
     (the reference's own conversion, HLLFunctions.scala:641-670; codec
     hll/package.scala:15-61), and DS -> STRM (export for consumers
-    reading stream-lib bytes).  Converted sketches estimate the same
-    cardinality but must never be MERGED with natively-built sketches
-    of the other system (different input hashes —
-    HLLFunctions.scala:628-630).
+    reading stream-lib bytes).  Format names are case-insensitive and
+    ``streamlib`` means STRM (``conf.resolve_backend``).  Converted
+    sketches estimate the same cardinality but must never be MERGED
+    with natively-built sketches of the other system (different input
+    hashes — HLLFunctions.scala:628-630).
     """
-    f, t = impl_from.upper(), impl_to.upper()
-    if (f, t) == ("DS", "AGKN"):
-        from .agkn import ds_to_agkn_udf
+    from .agkn import ds_to_agkn_udf
+    from .strm import ds_to_strm_udf, strm_to_agkn_udf
 
-        return ds_to_agkn_udf()(_col(col))
-    if (f, t) == ("STRM", "AGKN"):
-        from .strm import strm_to_agkn_udf
-
-        return strm_to_agkn_udf()(_col(col))
-    if (f, t) == ("DS", "STRM"):
-        from .strm import ds_to_strm_udf
-
-        return ds_to_strm_udf()(_col(col))
-    raise ValueError(
-        f"Conversion from {impl_from!r} to {impl_to!r} is not supported "
-        "(DS -> AGKN, STRM -> AGKN, DS -> STRM)."
+    converters = {
+        ("DS", "AGKN"): ds_to_agkn_udf,
+        ("STRM", "AGKN"): strm_to_agkn_udf,
+        ("DS", "STRM"): ds_to_strm_udf,
+    }
+    key = tuple(
+        resolve_backend(None, name, for_conversion=True) for name in (impl_from, impl_to)
     )
+    if key not in converters:
+        raise ValueError(
+            f"Conversion from {impl_from!r} to {impl_to!r} is not supported "
+            "(DS -> AGKN, STRM -> AGKN, DS -> STRM)."
+        )
+    return converters[key]()(_col(col))
+
+
+def _agkn_cardinality(col) -> Column:
+    """Estimate of converted postgresql-hll bytes (what the reference's
+    interop test reads back from Postgres, PostgresInteropTest.scala:88-98)."""
+    from .agkn import agkn_cardinality_udf
+
+    return agkn_cardinality_udf()(_col(col))
 
 
 # ---------------------------------------------------------------------------
@@ -326,127 +338,89 @@ def bound_hll(relative_sd: float) -> BoundHLL:
 # ---------------------------------------------------------------------------
 
 
-def register(spark) -> None:
-    """Register ALL NINE reference SQL names on a session, so
-    ``spark.sql("SELECT hll_init_agg(x) ... GROUP BY g")`` resolves the
-    same surface as the reference's registry
-    (expressions/NativeFunctionRegistration.scala:13-85, name list
-    HLLFunctionRegistration.scala:8-18).
+#: SQL name -> (DataFrame function, column arguments (None: any number),
+#: optional literal arguments after them, init form).  An init form also
+#: gets the input's resolved type and, without a literal relativeSD, the
+#: session's ``spark.alchemy.hll.relativeSD`` as it is at analysis time.
+_SQL_FUNCTIONS = {
+    "hll_init": (hll_init, 1, 1, True),
+    "hll_init_collection": (hll_init_collection, 1, 1, True),
+    "hll_init_agg": (hll_init_agg, 1, 1, True),
+    "hll_init_collection_agg": (hll_init_collection_agg, 1, 1, True),
+    "hll_merge": (hll_merge, 1, 0, False),
+    "hll_row_merge": (hll_row_merge, None, 0, False),
+    "hll_cardinality": (hll_cardinality, 1, 0, False),
+    "hll_intersect_cardinality": (hll_intersect_cardinality, 2, 0, False),
+    "hll_convert": (hll_convert, 1, 2, False),
+    "agkn_cardinality": (_agkn_cardinality, 1, 0, False),
+}
 
-    Exactly these ten names are created: the nine, plus
-    ``agkn_cardinality``.  Two tiers:
 
-    * ``hll_cardinality`` / ``hll_intersect_cardinality`` /
-      ``hll_row_merge`` are SQL macros over the JVM built-ins — fully
-      Catalyst-inlined, zero Python.
-    * the init/aggregate/convert forms are Arrow UDFs / UDAFs hashing
-      with :mod:`pyxxh` (bit-identical to the JVM ``cardinality_hash``).
-      ``hll_init`` / ``hll_init_collection`` / ``hll_init_agg`` /
-      ``hll_init_collection_agg`` write their bytes with the same
-      :func:`sketch_codec.row_images` as the DataFrame ``hll_init*``,
-      so the per-row forms are byte-identical to their DataFrame twins
-      and SQL-built sketches MERGE correctly with DataFrame-built ones.
-      Note the UDAF forms materialize each group's values (no partial
-      aggregation — a Spark grouped-agg UDF limitation); they are the
-      SQL *compatibility* surface.  The DataFrame API
-      (``hll_init_agg``/``hll_merge`` above) stays on JVM aggregates
-      with partial aggregation and is the path for heavy pipelines.
-    """
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION hll_cardinality(sk BINARY) "
-        "RETURNS BIGINT RETURN hll_sketch_estimate(sk)"
-    )
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION hll_intersect_cardinality("
-        "a BINARY, b BINARY) RETURNS BIGINT RETURN "
-        "CASE WHEN a IS NULL AND b IS NULL THEN CAST(NULL AS BIGINT) "
-        "WHEN a IS NULL OR b IS NULL THEN 0L "
-        "ELSE greatest(hll_sketch_estimate(a) + hll_sketch_estimate(b) "
-        "- hll_sketch_estimate(hll_union(a, b, true)), 0L) END"
-    )
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION hll_row_merge(a BINARY, b BINARY) "
-        "RETURNS BINARY RETURN CASE WHEN a IS NULL THEN b WHEN b IS NULL THEN a "
-        "ELSE hll_union(a, b, true) END"
-    )
+class _SqlBuilder:
+    """Catalyst ``FunctionBuilder`` (``Seq[Expression] => Expression``)
+    for one SQL name, called by the analyzer once the call's arguments
+    are resolved.  It wraps them as Columns, calls the DataFrame function
+    of the same name and returns that Column's expression, so a SQL call
+    and its DataFrame twin plan the same tree."""
 
-    from .hashing import BINARY_SEED
-    from .pyxxh import hash_arrow_values, xxh64_long
+    def __init__(self, spark, name: str):
+        self.spark, self.name = spark, name
 
-    lg_k = _lg_k(None)  # error resolution at registration time
-    bin_seed = xxh64_long(BINARY_SEED)
-
-    def sketch_group(values: pa.Array, is_null: bool) -> bytes | None:
-        # one group is one row of the per-row writer
-        hashes = hash_arrow_values(values, bin_seed)
-        rows = np.zeros(len(hashes), dtype=np.int64)
-        return row_images(hashes, rows, np.array([is_null]), lg_k)[0].as_py()
-
-    @arrow_udf("binary")
-    def _sql_init_agg(v: pa.Array) -> bytes:
-        return sketch_group(v, v.null_count == len(v))  # all-null -> NULL
-
-    @arrow_udf("binary")
-    def _sql_init_collection_agg(v: pa.Array) -> bytes:
-        v = v.combine_chunks() if isinstance(v, pa.ChunkedArray) else v
-        # only NULL collections -> NULL sketch; flatten() drops null
-        # lists, null ELEMENTS are skipped by the hash layer
-        return sketch_group(v.flatten(), v.null_count == len(v))
-
-    @arrow_udf("binary")
-    def _sql_merge(v: pa.Array) -> bytes:
-        return union_images(v.to_pylist())
-
-    def sql_rows_udf(elements: bool):
-        @arrow_udf("binary")
-        def sketch_rows(v: pa.Array) -> pa.Array:
-            values, rows, null_mask = _split_rows(v, elements)
-            return row_images(hash_arrow_values(values, bin_seed), rows, null_mask, lg_k)
-
-        return sketch_rows
-
-    @arrow_udf("binary")
-    def _sql_convert(sk: pa.Array, impl_from: pa.Array, impl_to: pa.Array) -> pa.Array:
-        from ..conf import resolve_backend
-        from .agkn import ds_to_agkn
-        from .strm import ds_to_strm, strm_to_agkn
-
-        pairs = {
-            ("DS", "AGKN"): ds_to_agkn,
-            ("STRM", "AGKN"): strm_to_agkn,
-            ("DS", "STRM"): ds_to_strm,
-        }
-        out = []
-        for b, f, t in zip(
-            sk.to_pylist(), impl_from.to_pylist(), impl_to.to_pylist()
-        ):
-            key = (
-                resolve_backend(None, f, for_conversion=True),
-                resolve_backend(None, t, for_conversion=True),
+    def apply(self, args):
+        fn, n_cols, n_lits, init = _SQL_FUNCTIONS[self.name]
+        exprs = [args.apply(i) for i in range(args.length())]
+        n_cols = len(exprs) if n_cols is None else n_cols
+        if not n_cols <= len(exprs) <= n_cols + n_lits:
+            expected = f"{n_cols} to {n_cols + n_lits}" if n_lits else n_cols
+            raise TypeError(f"{self.name} takes {expected} arguments, got {len(exprs)}")
+        to_column = self.spark._jvm.org.apache.spark.sql.classic.ExpressionUtils.column
+        cols = [Column(to_column(e)) for e in exprs[:n_cols]]
+        lits = [self._literal(e) for e in exprs[n_cols:]]
+        if init:
+            sd = lits[0] if lits else self.spark.conf.get(
+                DEFAULT_ERROR_CONF_KEY, str(DEFAULT_RELATIVE_SD)
             )
-            if key not in pairs:
-                raise ValueError(f"Conversion {f!r} -> {t!r} is not supported")
-            out.append(pairs[key](b))
-        return pa.array(out, type=pa.binary())
+            dtype = T._parse_datatype_json_string(exprs[0].dataType().json())
+            col = fn(cols[0], float(sd), dtype)
+        else:
+            col = fn(*cols, *lits)
+        return self.spark._jsparkSession.expression(col._jc)
 
-    @arrow_udf("bigint")
-    def _sql_agkn_cardinality(images: pa.Array) -> pa.Array:
-        from .agkn import agkn_cardinality
+    def _literal(self, e) -> str:
+        value = e.eval(None) if e.foldable() else None
+        if value is None:
+            raise ValueError(
+                f"{self.name}: argument {e.sql()} must be a non-NULL literal"
+            )
+        return str(value)
 
-        return pa.array(
-            [
-                None if b is None else round(agkn_cardinality(bytes(b)))
-                for b in images.to_pylist()
-            ],
-            type=pa.int64(),
-        )
+    class Java:
+        implements = ["scala.Function1"]
 
-    spark.udf.register("hll_init_agg", _sql_init_agg)
-    spark.udf.register("hll_init_collection_agg", _sql_init_collection_agg)
-    spark.udf.register("hll_merge", _sql_merge)
-    spark.udf.register("hll_init", sql_rows_udf(False))
-    spark.udf.register("hll_init_collection", sql_rows_udf(True))
-    spark.udf.register("hll_convert", _sql_convert)
-    # estimator over converted postgresql-hll bytes (what the reference's
-    # interop test reads back from Postgres, PostgresInteropTest.scala:88-98)
-    spark.udf.register("agkn_cardinality", _sql_agkn_cardinality)
+
+def register(spark) -> None:
+    """Register the nine reference SQL names, plus ``agkn_cardinality``,
+    as temporary functions of ``spark``, the way the reference's
+    ``NativeFunctionRegistration`` does (NativeFunctionRegistration.scala:13-85,
+    name list HLLFunctionRegistration.scala:8-18).
+
+    Each name is a py4j :class:`_SqlBuilder` in the session's function
+    registry: the analyzer hands it the resolved arguments and gets back
+    the expression of the DataFrame function of the same name, so
+    ``spark.sql("SELECT hll_init_agg(x) ... GROUP BY g")`` plans the same
+    partial ``hll_sketch_agg`` as ``hll_init_agg("x")`` and writes the
+    same bytes.  SQL takes what the DataFrame API takes: any input type
+    (struct, array and map included), an optional literal relativeSD
+    (``hll_init_agg(x, 0.01)``, validated at analysis), a variadic
+    ``hll_row_merge`` and literal ``hll_convert`` format names.  An
+    un-aliased call's output column is named after that expression, not
+    the SQL name.  The builders run in the driver's Python process through
+    the py4j callback server, which classic Spark provides
+    (``foreachBatch`` uses the same).
+    """
+    from pyspark.java_gateway import ensure_callback_server_started
+
+    ensure_callback_server_started(spark.sparkContext._gateway)
+    registry = spark._jsparkSession.sessionState().functionRegistry()
+    for name in _SQL_FUNCTIONS:
+        registry.createOrReplaceTempFunction(name, _SqlBuilder(spark, name), "scala_udf")

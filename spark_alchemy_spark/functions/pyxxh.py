@@ -2,10 +2,12 @@
 
 Re-implements the hash Spark's ``xxhash64`` expression computes (XXH64,
 seed 42; per-type dispatch from Spark's ``XxHash64`` /
-``hashExpressions``) so Arrow UDAFs can hash raw SQL values exactly
-like the JVM path does — a sketch built through the SQL-registered
-aggregate names must be MERGEABLE with one built through the DataFrame
-API, which requires bit-identical hashing.
+``hashExpressions``) outside the JVM.  No sketch is built with it: the
+SQL names resolve to the DataFrame functions' JVM ``cardinality_hash``
+(``hll.register``).  It stays as the JVM-xxhash oracle the tests check
+sketch bytes against, as ``xxh64_int`` for ``operators/similarity.py``,
+and as the kernel behind the benchmark's
+``functions.pyxxh.hash_arrow_values_ns_per_value`` metric.
 
 Per-type rules (Spark ``XXH64.java`` + ``InterpretedHashFunction``):
 
@@ -20,8 +22,7 @@ Algorithm reference: the public xxHash specification (Yann Collet,
 BSD-2) — Spark's XXH64.java implements the same standard layout.
 
 Everything is mod-2^64 arithmetic; the numpy paths use uint64 wraparound
-for vectorized batches, the bytes path is a per-value Python loop (the
-SQL-compat surface — the DataFrame API stays on the JVM hash).
+for vectorized batches, the bytes path is a per-value Python loop.
 """
 
 from __future__ import annotations
@@ -215,6 +216,6 @@ def hash_arrow_values(arr, binary_seed: int | None = None) -> np.ndarray:
             dtype=np.int64,
         )
     raise TypeError(
-        f"SQL-registered HLL aggregates do not support input type {t}; "
-        "use the DataFrame API (cardinality_hash handles nested types)"
+        f"hash_arrow_values does not support input type {t} "
+        "(hashing.cardinality_hash handles nested types)"
     )

@@ -8,10 +8,10 @@ but the reference also ships per-row scalar sketch builders
 alchemy/.../hll/HLLFunctions.scala:192-218, :294-321) for which Spark has
 no built-in.  Running an aggregate per row would shuffle the whole table;
 instead :func:`row_images` builds the serialized sketch bytes of a whole
-Arrow batch at once.  It is the one per-row writer: the DataFrame and SQL
-``hll_init`` / ``hll_init_collection`` and the SQL ``hll_init_agg`` /
-``hll_init_collection_agg`` (one group = one row) all call it.  The
-bytes are *bit-compatible* with Datasketches' updatable serialization,
+Arrow batch at once.  It is the one per-row writer: ``hll_init`` /
+``hll_init_collection`` call it, from the DataFrame API and from SQL
+text alike (``hll.register`` resolves SQL names to the same Columns).
+The bytes are *bit-compatible* with Datasketches' updatable serialization,
 so the JVM built-ins union and estimate them natively.
 ``tests/test_sketch_writer.py::test_writer_matches_hll_sketch_agg``
 checks this: at every tested size, on both sides of each promotion

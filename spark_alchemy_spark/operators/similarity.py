@@ -1390,18 +1390,23 @@ def _append_batch_fused(
     lists_base = _txn_local_path(path, "lists")
     list_counts: dict = {}
     n_footer = 0
-    for lid, fname in _scan_list_files(path):
-        if (lid, fname) not in pre:
-            nrows = pq.ParquetFile(
-                os.path.join(lists_base, f"list_id={lid}", fname)
-            ).metadata.num_rows
-            list_counts[lid] = list_counts.get(lid, 0) + nrows
-            n_footer += nrows
+    written = [key for key in _scan_list_files(path) if key not in pre]
+    for lid, fname in written:
+        nrows = pq.ParquetFile(
+            os.path.join(lists_base, f"list_id={lid}", fname)
+        ).metadata.num_rows
+        list_counts[lid] = list_counts.get(lid, 0) + nrows
+        n_footer += nrows
     if n_footer != n_batch:
+        # the rows are already on disk and, in batch mode, no intent
+        # covers them: name the files so an operator can remove them
+        # (not deleted here — a second writer's files may be among them)
         raise RuntimeError(
             f"ivf append wrote {n_footer} rows by parquet footer but "
             f"observed {n_batch} in the write job — a second writer "
-            "touched the index mid-append"
+            "touched the index mid-append.  The index stats were not "
+            f"updated; the new files under {lists_base} are these "
+            f"(list_id, file) pairs: {sorted(written)}"
         )
     list_counts = {lid: n for lid, n in list_counts.items() if n > 0}
     new_n = base_n + n_batch

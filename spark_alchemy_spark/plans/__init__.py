@@ -108,10 +108,13 @@ def codegen_stage_count(df: DataFrame) -> int:
 
 
 def python_eval_ops(df: DataFrame) -> list[str]:
-    """Python-side operators in the plan — each is an Arrow boundary;
-    they should exist only where the operator genuinely needs Python."""
+    """Python-side operators in the plan (evaluation, map, grouped-map,
+    aggregate and window) — each is an Arrow boundary; they should exist
+    only where the operator genuinely needs Python."""
     return re.findall(
-        r"(ArrowEvalPython|BatchEvalPython|MapInPandas|FlatMapGroupsInPandas)",
+        r"(ArrowEvalPython|BatchEvalPython|MapInPandas|MapInArrow"
+        r"|FlatMapGroupsInPandas|FlatMapGroupsInArrow"
+        r"|ArrowAggregatePython|AggregateInPandas|ArrowWindowPython|WindowInPandas)",
         formatted_plan(df),
     )
 

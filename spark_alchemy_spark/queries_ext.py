@@ -95,15 +95,16 @@ def hll_sql_surface(spark, sf_dir):
     hll_cardinality, hll_intersect_cardinality, hll_convert — the two
     collection forms are driven by hll_sql_surface_collections).  The
     reference registers all nine into the session FunctionRegistry
-    (NativeFunctionRegistration.scala:20-26); here scalar names are SQL
-    macros over JVM built-ins and init/agg/convert names are Arrow
-    UDFs/UDAFs whose hashing is bit-identical to the DataFrame path.
-    Every column must equal the exact per-group distinct count."""
+    (NativeFunctionRegistration.scala:20-26); here ``hll.register``
+    resolves each name to the expression its DataFrame function builds,
+    so the aggregate names plan partial JVM aggregates and every name
+    writes the DataFrame path's bytes.  Every column must equal the
+    exact per-group distinct count."""
     from .conf import DEFAULT_ERROR_CONF_KEY
 
     (events,) = _t(spark, sf_dir, "events")
     spark.conf.set(DEFAULT_ERROR_CONF_KEY, str(_EXACT_SD))
-    hll.register(spark)  # picks up the conf'd error bound
+    hll.register(spark)  # analysis below picks up the conf'd error bound
     view = _sink_name("events_v")
     events.createOrReplaceTempView(view)
     # Both sketch paths ride ONE aggregation (r10: the scalar-path CTE

@@ -32,9 +32,24 @@ def test_q5_broadcasts_dims(spark):
 
 def test_hll_aggregate_path_is_pure_jvm(spark):
     """The sketch algebra's aggregate path must never cross into Python
-    (SURVEY.md §7.1: 100% codegen'd Catalyst)."""
-    for name in ("hll_init_agg_cardinality", "hll_merge_reaggregate"):
-        df = QUERIES[name](spark, SF)
+    (SURVEY.md §7.1: 100% codegen'd Catalyst), whether it is built with
+    the DataFrame API or resolved from SQL text by ``hll.register``."""
+    from spark_alchemy_spark.functions import hll
+
+    hll.register(spark)
+    spark.range(1000).selectExpr("id % 7 AS g", "id AS x").createOrReplaceTempView(
+        "plan_events"
+    )
+    init_agg = "SELECT g, hll_init_agg(x) AS sk FROM plan_events GROUP BY g"
+    dfs = {
+        name: QUERIES[name](spark, SF)
+        for name in ("hll_init_agg_cardinality", "hll_merge_reaggregate")
+    }
+    dfs["sql hll_init_agg"] = spark.sql(init_agg)
+    dfs["sql hll_merge"] = spark.sql(
+        f"SELECT g % 2 AS h, hll_merge(sk) AS sk FROM ({init_agg}) GROUP BY g % 2"
+    )
+    for name, df in dfs.items():
         assert plans.python_eval_ops(df) == [], name
         # codegen spans only materialize in the AQE final plan
         df.collect()

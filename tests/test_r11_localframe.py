@@ -145,3 +145,45 @@ def test_fused_batch_append_empty_batch_is_noop(spark, fused_idx):
     assert rep["list_counts"] == {}
     assert rep["drift_ratio"] == 1.0
     assert read_index_stats(spark, path) == pre
+
+
+def _list_files(path):
+    return {
+        (int(d.name.split("=", 1)[1]), f.name)
+        for d in os.scandir(os.path.join(path, "lists"))
+        if d.is_dir()
+        for f in os.scandir(d.path)
+        if f.name.endswith(".parquet")
+    }
+
+
+def test_fused_batch_append_count_mismatch_names_written_files(
+    spark, monkeypatch, tmp_path
+):
+    """A footer/observed count mismatch raises after the rows are on
+    disk; in batch mode no intent covers them, so the error must name
+    every (list_id, file) pair the append wrote."""
+    import pyarrow.parquet as pq
+
+    corpus = spark.createDataFrame(
+        [(i, [float(i % 5 + 1), float(i % 3 + 1)]) for i in range(40)],
+        "vec_id long, embedding array<double>",
+    )
+    path = str(tmp_path / "idx")
+    build_ivf_index(corpus, "vec_id", "embedding", path, n_centroids=2)
+    before = _list_files(path)
+    real = pq.ParquetFile
+
+    class InflatedFooter:
+        def __init__(self, *args, **kwargs):
+            rows = real(*args, **kwargs).metadata.num_rows + 1
+            self.metadata = type("Meta", (), {"num_rows": rows})
+
+    monkeypatch.setattr(pq, "ParquetFile", InflatedFooter)
+    batch = corpus.select((F.col("vec_id") + 100).alias("vec_id"), "embedding")
+    with pytest.raises(RuntimeError, match="second writer") as err:
+        append_ivf_index(batch, "vec_id", "embedding", path)
+    written = _list_files(path) - before
+    assert written
+    for lid, fname in written:
+        assert f"({lid}, {fname!r})" in str(err.value)

@@ -1,10 +1,11 @@
 """SQL-name registration tests: all nine reference names resolve from
 pure SQL text (reference NativeFunctionRegistration.scala:20-26,
-name list HLLFunctionRegistration.scala:8-18), with the null algebra
-and — critically — hashing that is bit-identical to the DataFrame path,
-so sketches built through either surface merge without double counting.
-Also pins the Python xxhash64 (pyxxh) against Spark's JVM xxhash64 and
-the dense HLL_8 writer against Spark's reader."""
+name list HLLFunctionRegistration.scala:8-18) to the expression their
+DataFrame twin builds, with the null algebra, the reference's SQL
+signatures (nested inputs, literal relativeSD, variadic row merge) and
+byte-identical sketches, so sketches built through either surface merge
+without double counting.  Also pins the Python xxhash64 (pyxxh) against
+Spark's JVM xxhash64 and the dense HLL_8 writer against Spark's reader."""
 
 from __future__ import annotations
 
@@ -12,7 +13,9 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from spark_alchemy_spark.conf import DEFAULT_ERROR_CONF_KEY
 from spark_alchemy_spark.functions import hll
+from spark_alchemy_spark.functions.agkn import ds_parse
 
 
 @pytest.fixture()
@@ -47,10 +50,9 @@ def test_all_nine_names_resolve(registered):
 
 
 def test_sql_and_dataframe_sketches_merge_without_double_count(registered):
-    """The SQL UDAF hashes with pyxxh, the DataFrame path with JVM
-    xxhash64; if they ever diverge, merging sketches of the SAME data
-    inflates the estimate.  Identical estimates alone and merged ==
-    bit-identical hashing end to end."""
+    """If the SQL and DataFrame surfaces ever hashed differently, merging
+    sketches of the SAME data would inflate the estimate.  Identical
+    estimates alone and merged == identical hashing end to end."""
     spark = registered
     df = spark.range(1000).select((F.col("id") % 500).alias("x"))
     df.createOrReplaceTempView("tmerge")
@@ -133,6 +135,118 @@ def test_register_creates_exactly_the_reference_names(spark):
         "hll_convert",
         "agkn_cardinality",
     }
+
+
+NESTED_ROWS = [
+    (0, 0, None, None, None),
+    (1, 0, (1, "x"), [], {}),
+    (2, 1, (None, "y"), [None], {"k": None}),
+    (3, 1, (2, None), [(1, "x"), (None, None), None], {"k": 1, "j": 2}),
+    (4, 2, None, None, None),
+]
+NESTED_SCHEMA = (
+    "id int, g int, s struct<a: bigint, b: string>, "
+    "a array<struct<a: bigint, b: string>>, m map<string, bigint>"
+)
+
+
+@pytest.mark.parametrize(
+    "name, column",
+    [
+        ("hll_init", "s"),
+        ("hll_init", "a"),
+        ("hll_init", "m"),
+        ("hll_init_agg", "s"),
+        ("hll_init_agg", "a"),
+        ("hll_init_agg", "m"),
+        ("hll_init_collection", "a"),
+        ("hll_init_collection", "m"),
+        ("hll_init_collection_agg", "a"),
+        ("hll_init_collection_agg", "m"),
+    ],
+)
+def test_sql_and_dataframe_nested_images_are_byte_identical(registered, name, column):
+    """struct, array<struct> and map inputs (NULL, [], [null] rows and an
+    all-NULL group) give the same bytes through SQL and the DataFrame
+    function of the same name."""
+    spark = registered
+    df = spark.createDataFrame(NESTED_ROWS, NESTED_SCHEMA).coalesce(1)
+    df.createOrReplaceTempView("t_nested")
+    sketch = getattr(hll, name)(column, dtype=df.schema[column].dataType).alias("sk")
+    if name.endswith("_agg"):
+        dataframe = df.groupBy("g").agg(sketch).orderBy("g")
+        sql = f"SELECT g, {name}({column}) AS sk FROM t_nested GROUP BY g ORDER BY g"
+    else:
+        dataframe = df.select("id", sketch).orderBy("id")
+        sql = f"SELECT id, {name}({column}) AS sk FROM t_nested ORDER BY id"
+    expected = [tuple(r) for r in dataframe.collect()]
+    assert [tuple(r) for r in spark.sql(sql).collect()] == expected
+    assert expected[-1][1] is None  # a NULL row / an all-NULL group
+
+
+def test_init_agg_literal_relative_sd(registered):
+    """hll_init_agg(x, 0.01) resolves lgK 14 like the DataFrame call, and
+    a relativeSD above 0.39 fails when the query is analyzed."""
+    spark = registered
+    df = spark.range(3000).select((F.col("id") % 1000).alias("x")).coalesce(1)
+    df.createOrReplaceTempView("t_sd")
+    sql = spark.sql("SELECT hll_init_agg(x, 0.01) AS sk FROM t_sd").collect()
+    dataframe = df.agg(hll.hll_init_agg("x", 0.01).alias("sk")).collect()
+    assert sql == dataframe
+    assert ds_parse(bytes(sql[0]["sk"]))[1] == 14
+    with pytest.raises(Exception, match="at most 0.39"):
+        spark.sql("SELECT hll_init_agg(x, 0.40) AS sk FROM t_sd")
+
+
+def test_row_merge_is_variadic_and_skips_nulls(registered):
+    spark = registered
+    rows = spark.sql(
+        """
+        WITH s AS (SELECT hll_init(1L) a, hll_init(2L) b, hll_init(3L) c)
+        SELECT hll_cardinality(hll_row_merge(a, b, c)) AS abc,
+               hll_cardinality(hll_row_merge(a, NULL, c)) AS a_c,
+               hll_cardinality(hll_row_merge(NULL, b, NULL)) AS b,
+               hll_row_merge(CAST(NULL AS BINARY), NULL, NULL) AS none
+        FROM s
+        """
+    ).collect()[0]
+    assert tuple(rows) == (3, 2, 1, None)
+
+
+def test_session_relative_sd_resolves_at_analysis(registered):
+    """spark.alchemy.hll.relativeSD set after register() decides the lgK
+    of the SQL queries analyzed after it."""
+    spark = registered
+    previous = spark.conf.get(DEFAULT_ERROR_CONF_KEY, None)
+    lg_ks = []
+    try:
+        for sd in ("0.05", "0.01"):
+            spark.conf.set(DEFAULT_ERROR_CONF_KEY, sd)
+            for q in ("SELECT hll_init(7L) AS sk", "SELECT hll_init_agg(7L) AS sk"):
+                lg_ks.append(ds_parse(bytes(spark.sql(q).collect()[0]["sk"]))[1])
+    finally:
+        if previous is None:
+            spark.conf.unset(DEFAULT_ERROR_CONF_KEY)
+        else:
+            spark.conf.set(DEFAULT_ERROR_CONF_KEY, previous)
+    assert lg_ks == [9, 9, 14, 14]
+
+
+def test_hll_convert_format_names(registered):
+    """Both surfaces take format names through conf.resolve_backend
+    (case-insensitive, 'streamlib' = STRM); in SQL they must be literals."""
+    spark = registered
+    df = spark.range(200).agg(hll.hll_init_agg("id").alias("sk"))
+    df.createOrReplaceTempView("t_convert")
+    strm = df.select(hll.hll_convert("sk", "ds", "streamlib").alias("c"))
+    agkn = strm.select(hll.hll_convert("c", "streamlib", "agkn").alias("c"))
+    sql = spark.sql(
+        "SELECT hll_convert(hll_convert(sk, 'ds', 'streamlib'), 'StreamLib', 'Agkn') AS c "
+        "FROM t_convert"
+    )
+    assert agkn.collect() == sql.collect()
+    with pytest.raises(Exception, match="must be a non-NULL literal"):
+        spark.sql("SELECT hll_convert(sk, CAST(rand() AS STRING), 'AGKN') FROM t_convert")
 
 
 def test_pyxxh_matches_jvm_xxhash64(spark):
