@@ -1,27 +1,20 @@
-"""Session configuration keys and precision math for the HLL veneer.
+"""Session configuration keys, sketch format names and precision math
+for the HLL veneer.
 
-Mirrors the reference's backend-resolution precedence (argument >
-session conf > default) and its error->precision formula:
-  reference: alchemy/.../hll/HLLFunctions.scala:24-70 and
-  alchemy/.../hll/package.scala:13 (conf key
-  ``com.swoop.alchemy.hll.implementation``).
+Mirrors the reference's error->precision formula and its argument >
+session conf > default precedence for the relative standard deviation:
+  reference: alchemy/.../hll/HLLFunctions.scala:24-70.
 
-Our execution backend is Apache Datasketches via Spark >=3.5 built-ins
-(``hll_sketch_agg`` & co.), name ``DS``.  The reference's ``STRM`` /
-``AGKN`` backends are an on-disk byte format concern, not an execution
-one; ``AGKN`` bytes are available through
-:func:`spark_alchemy_spark.functions.hll.hll_convert` for
-postgresql-hll interop.
+The engine executes on Apache Datasketches via Spark >=3.5 built-ins
+(``hll_sketch_agg`` & co.), format name ``DS``.  The reference's
+``STRM`` / ``AGKN`` backends are on-disk byte formats here, not
+execution backends: :func:`spark_alchemy_spark.functions.hll.hll_convert`
+converts to them for stream-lib and postgresql-hll interop.
 """
 
 from __future__ import annotations
 
 import math
-
-# Conf key controlling the default backend (precedence: per-call arg >
-# this conf > default), same shape as the reference's
-# `com.swoop.alchemy.hll.implementation`.
-IMPLEMENTATION_CONF_KEY = "spark.alchemy.hll.implementation"
 
 # Conf key for the default relative standard deviation used when a
 # function is called without an explicit one.
@@ -34,13 +27,9 @@ DEFAULT_RELATIVE_SD = 0.05
 MIN_LG_K = 4
 MAX_LG_K = 21
 
-#: Supported backend names.  ``DS`` = Datasketches (execution), ``AGKN``
-#: = postgresql-hll compatible bytes, ``STRM`` = StreamLib HLL+ bytes
-#: (the latter two are byte formats for hll_convert, not execution
-#: backends).
-BACKENDS = ("DS", "AGKN")
-
-#: Byte formats accepted as conversion endpoints by hll_convert.
+#: Sketch byte formats accepted as hll_convert endpoints: ``DS`` =
+#: Datasketches (the engine's own), ``AGKN`` = postgresql-hll, ``STRM`` =
+#: StreamLib HLL+.
 CONVERSION_FORMATS = ("DS", "AGKN", "STRM")
 
 
@@ -67,33 +56,16 @@ def error_from_precision(lg_k: int) -> float:
     return 1.106 / math.sqrt(2.0 ** lg_k)
 
 
-def resolve_backend(spark, impl: str | None, for_conversion: bool = False) -> str:
-    """Per-call arg > session conf > 'DS' default.
-
-    reference: HLLFunctions.scala:34-41 (same precedence chain).
-    With ``for_conversion`` the STRM/AGKN byte formats are accepted
-    (hll_convert endpoints); as an EXECUTION backend STRM still raises —
-    the engine runs on Datasketches.
-    """
-    name = impl
-    if name is None and spark is not None:
-        name = spark.conf.get(IMPLEMENTATION_CONF_KEY, None)
-    name = (name or "DS").upper()
+def sketch_format(name) -> str:
+    """Canonical sketch byte format name: case-insensitive, and
+    ``streamlib`` means ``STRM``; anything else (a SQL number literal
+    included) raises."""
+    name = str(name).upper()
     if name == "STREAMLIB":
         name = "STRM"
-    if for_conversion:
-        if name not in CONVERSION_FORMATS:
-            raise ValueError(
-                f"Unknown sketch byte format {name!r}; expected one of "
-                f"{CONVERSION_FORMATS}"
-            )
-        return name
-    if name == "STRM":
+    if name not in CONVERSION_FORMATS:
         raise ValueError(
-            "backend 'STRM' (StreamLib) is not an execution backend here; "
-            "the engine runs on Datasketches ('DS'). Use hll_convert for "
-            "StreamLib ('STRM') / postgresql-hll ('AGKN') byte interop."
+            f"Unknown sketch byte format {name!r}; expected one of "
+            f"{CONVERSION_FORMATS}"
         )
-    if name not in BACKENDS:
-        raise ValueError(f"Unknown HLL backend {name!r}; expected one of {BACKENDS}")
     return name

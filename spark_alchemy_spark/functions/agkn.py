@@ -1,127 +1,46 @@
-"""AgKn / postgresql-hll byte-format codec: the interop half of
-``hll_convert`` (reference alchemy/.../hll/HLLFunctions.scala:641-670,
+"""AgKn / postgresql-hll byte format: the one module that reads and
+writes it, and the converters into it (the interop half of
+``hll_convert``, reference alchemy/.../hll/HLLFunctions.scala:641-670,
 conversion core hll/package.scala:15-61).
 
 The reference converts StreamLib sketches into Aggregate Knowledge's
 schema-version-1 ``FULL`` layout register-by-register so the bytes can be
 stored in / unioned by the ``postgresql-hll`` extension.  Our engine's
 native sketches are Apache Datasketches HLL (Spark >=3.5 built-ins), so
-the analogous one-way conversion here is **DS -> AGKN**:
-
-* parse the Datasketches sketch image (coupon LIST / SET promoted on the
-  fly, or dense HLL_8 registers),
-* re-emit the registers in the postgresql-hll v1 storage layout
-  (version/type byte, parameter byte, cutoff byte, big-endian bit-packed
-  registers — public spec: postgresql-hll STORAGE.markdown; layout
-  mirrored from the reference's SchemaVersionOne/HLLMetadata usage at
-  hll/package.scala:47-60).
+this module converts both **DS -> AGKN** and the reference's own
+**STRM -> AGKN**: it takes the source image's registers from the module
+that owns that format (``sketch_codec.ds_registers``,
+``strm.strm_registers``) and re-emits them in the postgresql-hll v1
+storage layout (version/type byte, parameter byte, cutoff byte,
+big-endian bit-packed registers — public spec: postgresql-hll
+STORAGE.markdown; layout mirrored from the reference's
+SchemaVersionOne/HLLMetadata usage at hll/package.scala:47-60).
 
 As with the reference's STRM -> AGKN, converted sketches estimate the
 same cardinality but must never be merged with sketches built natively
 by the other system (different input hash functions — reference note at
 hll/HLLFunctions.scala:628-630).
 
-Format knowledge is from public sources only: the Apache Datasketches
-HLL serialization spec (PreambleUtil.java) and the postgresql-hll
-storage spec.
+Format knowledge is from the public postgresql-hll storage spec.
 """
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
-import pandas as pd
 
-_KEY_BITS = 26
-_KEY_MASK = (1 << _KEY_BITS) - 1
-
-_MODE_LIST = 0
-_MODE_SET = 1
-_MODE_HLL = 2
-
-_TGT_HLL_8 = 2
+from .sketch_codec import ds_registers, register_estimate
+from .strm import strm_registers
 
 # postgresql-hll v1 type ordinals (storage spec)
 _AGKN_VERSION = 1
 _AGKN_TYPE_FULL = 4
 
-
-# ---------------------------------------------------------------------------
-# Datasketches image -> dense registers
-# ---------------------------------------------------------------------------
-
-
-def ds_parse(data: bytes) -> tuple[str, int, np.ndarray]:
-    """Parse a Datasketches HLL image WITHOUT densifying coupon modes.
-
-    Returns ``("coupons", lg_k, int64 coupon array)`` for LIST/SET
-    images or ``("dense", lg_k, uint8 registers)`` for HLL_8 images.
-    Keeping coupon images as coupons matters for bulk unions: a tiny
-    per-row image would otherwise allocate a full 2^lgK register array
-    (1 MiB at lgK=20) just to carry a handful of values.
-    """
-    if len(data) < 8:
-        raise ValueError("not a Datasketches HLL image: too short")
-    lg_k = data[3]
-    if not 4 <= lg_k <= 21:
-        raise ValueError(f"implausible lgK={lg_k}")
-    mode = data[7] & 0x3
-    m = 1 << lg_k
-    if mode == _MODE_HLL:
-        tgt = (data[7] >> 2) & 0x3
-        if tgt != _TGT_HLL_8:
-            raise NotImplementedError(
-                "only HLL_8 dense images are supported (Spark's target type)"
-            )
-        body = np.frombuffer(data, dtype=np.uint8, offset=40, count=m)
-        return "dense", lg_k, body.copy()
-    if mode == _MODE_LIST:
-        count = data[6]
-        coupons = np.frombuffer(data, dtype="<i4", offset=8, count=count)
-    else:  # SET: count int at 8, open-hash (updatable) or packed (compact)
-        (count,) = struct.unpack_from("<i", data, 8)
-        avail = (len(data) - 12) // 4
-        coupons = np.frombuffer(data, dtype="<i4", offset=12, count=avail)
-        coupons = coupons[coupons != 0]
-        if len(coupons) != count:
-            raise ValueError(
-                f"corrupt SET image: {len(coupons)} coupons, count={count}"
-            )
-    return "coupons", lg_k, coupons.astype(np.int64) & 0xFFFFFFFF
+#: Register width of every image this package writes (the reference's
+#: metadata choice, hll/package.scala:52-60).
+_REGWIDTH = 6
 
 
-def coupons_to_registers(coupons: np.ndarray, lg_k: int) -> np.ndarray:
-    """Densify coupons exactly as the Java library does on insert:
-    ``slot = coupon_low26 & (2^lgK - 1)``, ``value = coupon >> 26``,
-    max per slot."""
-    m = 1 << lg_k
-    regs = np.zeros(m, dtype=np.uint8)
-    if len(coupons):
-        slots = (coupons & _KEY_MASK) & (m - 1)
-        vals = (coupons >> _KEY_BITS).astype(np.uint8)
-        np.maximum.at(regs, slots, vals)
-    return regs
-
-
-def ds_registers(data: bytes) -> tuple[int, np.ndarray]:
-    """Parse a Datasketches HLL sketch image into ``(lg_k, registers)``.
-
-    Handles the three serialized modes (LIST, SET, HLL) in both compact
-    and updatable layouts; HLL mode must be HLL_8 (what Spark's
-    built-ins and our writer emit)."""
-    kind, lg_k, payload = ds_parse(data)
-    if kind == "dense":
-        return lg_k, payload
-    return lg_k, coupons_to_registers(payload, lg_k)
-
-
-# ---------------------------------------------------------------------------
-# registers -> AgKn v1 dense image
-# ---------------------------------------------------------------------------
-
-
-def agkn_from_registers(lg_k: int, registers: np.ndarray, regwidth: int = 6) -> bytes:
+def agkn_from_registers(lg_k: int, registers: np.ndarray, regwidth: int = _REGWIDTH) -> bytes:
     """postgresql-hll schema-v1 FULL image of a register array.
 
     Header (3 bytes, storage spec):
@@ -153,7 +72,8 @@ def agkn_from_registers(lg_k: int, registers: np.ndarray, regwidth: int = 6) -> 
 
 
 def agkn_registers(data: bytes) -> tuple[int, int, np.ndarray]:
-    """Parse an AgKn v1 FULL image back to ``(log2m, regwidth, registers)``."""
+    """Parse an AgKn v1 FULL image of any regwidth back to
+    ``(log2m, regwidth, registers)``."""
     if (data[0] >> 4) != _AGKN_VERSION or (data[0] & 0xF) != _AGKN_TYPE_FULL:
         raise ValueError("not an AgKn v1 FULL image")
     regwidth = ((data[1] >> 5) & 0x7) + 1
@@ -167,62 +87,18 @@ def agkn_registers(data: bytes) -> tuple[int, int, np.ndarray]:
 
 
 def agkn_cardinality(data: bytes) -> float:
-    """HLL estimate from an AgKn FULL image (Flajolet et al. estimator
-    with the small-range linear-counting correction postgresql-hll
-    applies) — the verification oracle for conversion tests."""
-    log2m, _, regs = agkn_registers(data)
-    m = 1 << log2m
-    if m >= 128:
-        alpha = 0.7213 / (1 + 1.079 / m)
-    elif m == 64:
-        alpha = 0.709
-    elif m == 32:
-        alpha = 0.697
-    else:
-        alpha = 0.673
-    est = alpha * m * m / np.power(2.0, -regs.astype(np.float64)).sum()
-    zeros = int((regs == 0).sum())
-    if est <= 2.5 * m and zeros > 0:
-        est = m * np.log(m / zeros)
-    return float(est)
+    """HLL estimate of an AgKn FULL image: ``sketch_codec.register_estimate``
+    of its registers (the classic estimator with the small-range
+    linear-counting correction postgresql-hll applies)."""
+    return register_estimate(agkn_registers(data)[2])
 
 
-# ---------------------------------------------------------------------------
-# Column-level conversion
-# ---------------------------------------------------------------------------
+def ds_to_agkn(data: bytes) -> bytes:
+    """Datasketches image -> AgKn v1 FULL image (register copy)."""
+    return agkn_from_registers(*ds_registers(bytes(data)))
 
 
-def ds_to_agkn(data: bytes | None, regwidth: int = 6) -> bytes | None:
-    if data is None:
-        return None
-    lg_k, regs = ds_registers(bytes(data))
-    return agkn_from_registers(lg_k, regs, regwidth)
-
-
-def ds_to_agkn_udf(regwidth: int = 6):
-    """Arrow-batched pandas UDF: DS sketch bytes -> AgKn v1 FULL bytes."""
-    from pyspark.sql import functions as F
-
-    @F.pandas_udf("binary")
-    def convert(sketches: pd.Series) -> pd.Series:
-        return pd.Series(
-            [ds_to_agkn(s, regwidth) for s in sketches], dtype=object
-        )
-
-    return convert
-
-
-def agkn_cardinality_udf():
-    """Arrow-batched pandas UDF: AgKn FULL bytes -> rounded estimate
-    (mirrors postgresql-hll's ``hll_cardinality``, which the reference's
-    interop test reads back from Postgres — PostgresInteropTest.scala:88-98)."""
-    from pyspark.sql import functions as F
-
-    @F.pandas_udf("bigint")
-    def estimate(images: pd.Series) -> pd.Series:
-        return pd.Series(
-            [None if b is None else round(agkn_cardinality(b)) for b in images],
-            dtype="Int64",
-        )
-
-    return estimate
+def strm_to_agkn(data: bytes) -> bytes:
+    """STRM NORMAL image -> AgKn v1 FULL image (register copy), the
+    direct analogue of the reference's STRM -> AGKN conversion."""
+    return agkn_from_registers(*strm_registers(bytes(data)))

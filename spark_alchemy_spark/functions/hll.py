@@ -24,7 +24,9 @@ keys:
   hll_row_merge                hll_union folded with null-skip
   hll_cardinality              hll_sketch_estimate
   hll_intersect_cardinality    inclusion-exclusion composition
-  hll_convert                  pure-Python byte transcoder (agkn.py)
+  hll_convert                  Arrow UDF over one per-value
+                               transcoder; agkn.py, strm.py and
+                               sketch_codec.py each own one format
   ===========================  =====================================
 
 The table holds for SQL text too: :func:`register` resolves each SQL
@@ -54,13 +56,15 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import arrow_udf
+from pyspark.sql.pandas.types import to_arrow_type
 
 from ..conf import (
     DEFAULT_ERROR_CONF_KEY,
     DEFAULT_RELATIVE_SD,
     precision_from_error,
-    resolve_backend,
+    sketch_format,
 )
+from . import agkn, strm
 from .hashing import cardinality_hash, element_hashes
 from .sketch_codec import row_images
 
@@ -74,6 +78,7 @@ __all__ = [
     "hll_cardinality",
     "hll_intersect_cardinality",
     "hll_convert",
+    "agkn_cardinality",
     "BoundHLL",
     "bound_hll",
     "register",
@@ -259,6 +264,29 @@ def hll_intersect_cardinality(left, right) -> Column:
     )
 
 
+#: (from, to) format names -> per-value transcoder of one sketch image.
+_CONVERSIONS = {
+    ("DS", "AGKN"): agkn.ds_to_agkn,
+    ("STRM", "AGKN"): agkn.strm_to_agkn,
+    ("DS", "STRM"): strm.ds_to_strm,
+}
+
+
+@functools.lru_cache(maxsize=None)
+def _per_value_udf(fn, return_type: T.DataType):
+    """Arrow UDF applying ``fn`` to each non-NULL value; NULL stays NULL.
+    The one seam between the interop functions and the Python codecs."""
+    arrow_type = to_arrow_type(return_type)
+
+    @arrow_udf(return_type)
+    def per_value(v: pa.Array) -> pa.Array:
+        return pa.array(
+            [None if b is None else fn(b) for b in v.to_pylist()], type=arrow_type
+        )
+
+    return per_value
+
+
 def hll_convert(col, impl_from: str = "DS", impl_to: str = "AGKN") -> Column:
     """Convert sketch bytes between backend formats, register-by-register.
 
@@ -266,36 +294,29 @@ def hll_convert(col, impl_from: str = "DS", impl_to: str = "AGKN") -> Column:
     (the reference's own conversion, HLLFunctions.scala:641-670; codec
     hll/package.scala:15-61), and DS -> STRM (export for consumers
     reading stream-lib bytes).  Format names are case-insensitive and
-    ``streamlib`` means STRM (``conf.resolve_backend``).  Converted
+    ``streamlib`` means STRM (``conf.sketch_format``).  Converted
     sketches estimate the same cardinality but must never be MERGED
     with natively-built sketches of the other system (different input
     hashes — HLLFunctions.scala:628-630).
     """
-    from .agkn import ds_to_agkn_udf
-    from .strm import ds_to_strm_udf, strm_to_agkn_udf
-
-    converters = {
-        ("DS", "AGKN"): ds_to_agkn_udf,
-        ("STRM", "AGKN"): strm_to_agkn_udf,
-        ("DS", "STRM"): ds_to_strm_udf,
-    }
-    key = tuple(
-        resolve_backend(None, name, for_conversion=True) for name in (impl_from, impl_to)
-    )
-    if key not in converters:
+    key = (sketch_format(impl_from), sketch_format(impl_to))
+    if key not in _CONVERSIONS:
         raise ValueError(
             f"Conversion from {impl_from!r} to {impl_to!r} is not supported "
             "(DS -> AGKN, STRM -> AGKN, DS -> STRM)."
         )
-    return converters[key]()(_col(col))
+    return _per_value_udf(_CONVERSIONS[key], T.BinaryType())(_col(col))
 
 
-def _agkn_cardinality(col) -> Column:
-    """Estimate of converted postgresql-hll bytes (what the reference's
-    interop test reads back from Postgres, PostgresInteropTest.scala:88-98)."""
-    from .agkn import agkn_cardinality_udf
+def _rounded_agkn_cardinality(data: bytes) -> int:
+    return round(agkn.agkn_cardinality(data))
 
-    return agkn_cardinality_udf()(_col(col))
+
+def agkn_cardinality(col) -> Column:
+    """Rounded estimate of postgresql-hll bytes, as postgresql-hll's
+    ``hll_cardinality`` reads them back in the reference's interop test
+    (PostgresInteropTest.scala:88-98); NULL -> NULL."""
+    return _per_value_udf(_rounded_agkn_cardinality, T.LongType())(_col(col))
 
 
 # ---------------------------------------------------------------------------
@@ -352,7 +373,7 @@ _SQL_FUNCTIONS = {
     "hll_cardinality": (hll_cardinality, 1, 0, False),
     "hll_intersect_cardinality": (hll_intersect_cardinality, 2, 0, False),
     "hll_convert": (hll_convert, 1, 2, False),
-    "agkn_cardinality": (_agkn_cardinality, 1, 0, False),
+    "agkn_cardinality": (agkn_cardinality, 1, 0, False),
 }
 
 
@@ -363,11 +384,11 @@ class _SqlBuilder:
     of the same name and returns that Column's expression, so a SQL call
     and its DataFrame twin plan the same tree."""
 
-    def __init__(self, spark, name: str):
-        self.spark, self.name = spark, name
+    def __init__(self, spark, name: str, spec: tuple):
+        self.spark, self.name, self.spec = spark, name, spec
 
     def apply(self, args):
-        fn, n_cols, n_lits, init = _SQL_FUNCTIONS[self.name]
+        fn, n_cols, n_lits, init = self.spec
         exprs = [args.apply(i) for i in range(args.length())]
         n_cols = len(exprs) if n_cols is None else n_cols
         if not n_cols <= len(exprs) <= n_cols + n_lits:
@@ -386,16 +407,32 @@ class _SqlBuilder:
             col = fn(*cols, *lits)
         return self.spark._jsparkSession.expression(col._jc)
 
-    def _literal(self, e) -> str:
+    def _literal(self, e):
+        """A literal argument's value: py4j ints and floats as they are,
+        anything else (strings, decimals) as its string form."""
         value = e.eval(None) if e.foldable() else None
         if value is None:
             raise ValueError(
                 f"{self.name}: argument {e.sql()} must be a non-NULL literal"
             )
-        return str(value)
+        return value if isinstance(value, (int, float)) else str(value)
 
     class Java:
         implements = ["scala.Function1"]
+
+
+def register_functions(spark, table: dict) -> None:
+    """Install one :class:`_SqlBuilder` per row of ``table`` (laid out as
+    :data:`_SQL_FUNCTIONS`) as a temporary function of ``spark``.  The
+    builders run in this Python process through the py4j callback
+    server, which classic Spark provides (``foreachBatch`` uses the
+    same)."""
+    from pyspark.java_gateway import ensure_callback_server_started
+
+    ensure_callback_server_started(spark.sparkContext._gateway)
+    registry = spark._jsparkSession.sessionState().functionRegistry()
+    for name, spec in table.items():
+        registry.createOrReplaceTempFunction(name, _SqlBuilder(spark, name, spec), "scala_udf")
 
 
 def register(spark) -> None:
@@ -414,13 +451,6 @@ def register(spark) -> None:
     (``hll_init_agg(x, 0.01)``, validated at analysis), a variadic
     ``hll_row_merge`` and literal ``hll_convert`` format names.  An
     un-aliased call's output column is named after that expression, not
-    the SQL name.  The builders run in the driver's Python process through
-    the py4j callback server, which classic Spark provides
-    (``foreachBatch`` uses the same).
+    the SQL name.
     """
-    from pyspark.java_gateway import ensure_callback_server_started
-
-    ensure_callback_server_started(spark.sparkContext._gateway)
-    registry = spark._jsparkSession.sessionState().functionRegistry()
-    for name in _SQL_FUNCTIONS:
-        registry.createOrReplaceTempFunction(name, _SqlBuilder(spark, name), "scala_udf")
+    register_functions(spark, _SQL_FUNCTIONS)

@@ -1,4 +1,5 @@
-"""Pure-Python writer for Apache Datasketches HLL sketch bytes.
+"""Apache Datasketches HLL sketch images: the one module that reads and
+writes them.
 
 Spark >=3.5 executes HLL aggregation with Apache Datasketches
 (``hll_sketch_agg`` / ``hll_union_agg`` / ``hll_union`` /
@@ -17,6 +18,12 @@ so the JVM built-ins union and estimate them natively.
 checks this: at every tested size, on both sides of each promotion
 boundary, the writer holds the same coupons (or the same registers) as
 ``hll_sketch_agg`` over the same values.
+
+The read side, :func:`ds_parse` / :func:`ds_registers`, is what the
+interop transcoders start from: ``agkn.py`` (postgresql-hll) and
+``strm.py`` (stream-lib) each own their own byte format and take a
+Datasketches image's registers from here.  :func:`register_estimate` is
+the one estimator both of them read a register array with.
 
 Format knowledge is from the public Apache Datasketches HLL
 serialization spec and datasketches-java (PreambleUtil.java).  An image
@@ -46,8 +53,6 @@ import struct
 import numpy as np
 import pyarrow as pa
 
-from .agkn import coupons_to_registers, ds_parse
-
 MURMUR_SEED = 9001  # datasketches DEFAULT_UPDATE_SEED
 _C1 = 0x87C37B91114253D5
 _C2 = 0x4CF5AD432745937F
@@ -61,6 +66,101 @@ _HLL_8 = 2  # tgtHllType used by Spark's built-ins
 
 _MODE_LIST = 0
 _MODE_SET = 1
+_MODE_HLL = 2
+
+
+# ---------------------------------------------------------------------------
+# Read: image -> coupons or dense registers
+# ---------------------------------------------------------------------------
+
+
+def ds_parse(data: bytes) -> tuple[str, int, np.ndarray]:
+    """Parse a Datasketches HLL image WITHOUT densifying coupon modes.
+
+    Returns ``("coupons", lg_k, int64 coupon array)`` for LIST/SET
+    images or ``("dense", lg_k, uint8 registers)`` for HLL_8 images.
+    Keeping coupon images as coupons matters for bulk unions: a tiny
+    per-row image would otherwise allocate a full 2^lgK register array
+    (1 MiB at lgK=20) just to carry a handful of values.
+    """
+    if len(data) < 8:
+        raise ValueError("not a Datasketches HLL image: too short")
+    lg_k = data[3]
+    if not 4 <= lg_k <= 21:
+        raise ValueError(f"implausible lgK={lg_k}")
+    mode = data[7] & 0x3
+    m = 1 << lg_k
+    if mode == _MODE_HLL:
+        tgt = (data[7] >> 2) & 0x3
+        if tgt != _HLL_8:
+            raise NotImplementedError(
+                "only HLL_8 dense images are supported (Spark's target type)"
+            )
+        body = np.frombuffer(data, dtype=np.uint8, offset=40, count=m)
+        return "dense", lg_k, body.copy()
+    if mode == _MODE_LIST:
+        count = data[6]
+        coupons = np.frombuffer(data, dtype="<i4", offset=8, count=count)
+    else:  # SET: count int at 8, open-hash (updatable) or packed (compact)
+        (count,) = struct.unpack_from("<i", data, 8)
+        avail = (len(data) - 12) // 4
+        coupons = np.frombuffer(data, dtype="<i4", offset=12, count=avail)
+        coupons = coupons[coupons != 0]
+        if len(coupons) != count:
+            raise ValueError(
+                f"corrupt SET image: {len(coupons)} coupons, count={count}"
+            )
+    return "coupons", lg_k, coupons.astype(np.int64) & 0xFFFFFFFF
+
+
+def coupons_to_registers(coupons: np.ndarray, lg_k: int) -> np.ndarray:
+    """Densify coupons exactly as the Java library does on insert:
+    ``slot = coupon_low26 & (2^lgK - 1)``, ``value = coupon >> 26``,
+    max per slot."""
+    m = 1 << lg_k
+    regs = np.zeros(m, dtype=np.uint8)
+    if len(coupons):
+        slots = (coupons & _KEY_MASK) & (m - 1)
+        vals = (coupons >> _KEY_BITS).astype(np.uint8)
+        np.maximum.at(regs, slots, vals)
+    return regs
+
+
+def ds_registers(data: bytes) -> tuple[int, np.ndarray]:
+    """Parse a Datasketches HLL sketch image into ``(lg_k, registers)``.
+
+    Handles the three serialized modes (LIST, SET, HLL) in both compact
+    and updatable layouts; HLL mode must be HLL_8 (what Spark's
+    built-ins and our writer emit)."""
+    kind, lg_k, payload = ds_parse(data)
+    if kind == "dense":
+        return lg_k, payload
+    return lg_k, coupons_to_registers(payload, lg_k)
+
+
+def register_estimate(registers: np.ndarray) -> float:
+    """Classic HLL estimate of a dense register array (Flajolet et al.
+    2007): ``alpha_m * m^2 / sum(2^-register)``, with the alpha table
+    for m = 16, 32, 64 and ``0.7213 / (1 + 1.079/m)`` above, replaced by
+    linear counting ``m * ln(m / zeros)`` while the raw estimate is at
+    most 2.5m and some register is zero (the small-range correction
+    postgresql-hll applies).  It has no empirical bias correction, so
+    below 5m it can differ from stream-lib's HLL+ (the ints 0..49 at
+    p=5: 53.6 against stream-lib's 50; 0..29999 at p=14: 29,755
+    against 29,936); above 5m it is stream-lib's estimate unrounded.
+    """
+    m = len(registers)
+    alpha = {16: 0.673, 32: 0.697, 64: 0.709}.get(m, 0.7213 / (1 + 1.079 / m))
+    est = alpha * m * m / np.power(2.0, -registers.astype(np.float64)).sum()
+    zeros = int((registers == 0).sum())
+    if est <= 2.5 * m and zeros > 0:
+        est = m * np.log(m / zeros)
+    return float(est)
+
+
+# ---------------------------------------------------------------------------
+# Write: coupons or registers -> image
+# ---------------------------------------------------------------------------
 
 
 def _preamble(pre_ints: int, lg_k: int, lg_arr: int, flags: int, lo_field: int, mode: int) -> bytes:
@@ -178,7 +278,6 @@ def coupons_for_longs(values: "np.ndarray") -> "np.ndarray":
 # register-derived composite estimator, never a stale HIP value.
 # ---------------------------------------------------------------------------
 
-_MODE_HLL = 2
 _FLAG_OUT_OF_ORDER = 0x10
 
 

@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .hll import register_functions
+
 __all__ = [
     "theta_init_agg",
     "theta_merge",
@@ -211,49 +213,28 @@ def kll_weighted_quantiles(
     return sk.select(*group_cols, *cols, kll_count("__sk").alias("n_weight"))
 
 
+#: SQL name -> DataFrame twin, in ``hll._SQL_FUNCTIONS``'s layout:
+#: (function, column arguments, optional literal arguments, init form).
+#: ``theta_union_row`` takes an optional literal lgNomEntries and
+#: ``kll_quantile`` a literal rank.
+_SQL_FUNCTIONS = {
+    "theta_cardinality": (theta_cardinality, 1, 0, False),
+    "theta_union_row": (theta_union_row, 2, 1, False),
+    "theta_intersection_row": (theta_intersection_row, 2, 0, False),
+    "theta_difference_row": (theta_difference_row, 2, 0, False),
+    "kll_row_merge": (kll_row_merge, 2, 0, False),
+    "kll_quantile": (kll_quantile, 1, 1, False),
+    "kll_count": (kll_count, 1, 0, False),
+}
+
+
 def register_sql(spark) -> None:
     """Register the theta/KLL scalar surface under this engine's SQL
     names (the sketch-family extension of the reference's registry
-    pattern, NativeFunctionRegistration.scala:20-26): pure SQL macros
-    over the JVM built-ins — Catalyst inlines them, zero Python.  The
-    aggregate forms already have SQL names (``theta_sketch_agg``,
-    ``theta_union_agg``, ``kll_sketch_agg_double`` ...); these macros
-    add the null algebra the DataFrame wrappers guarantee."""
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION theta_cardinality(sk BINARY) "
-        "RETURNS BIGINT RETURN CASE WHEN sk IS NULL THEN CAST(NULL AS BIGINT) "
-        "ELSE CAST(theta_sketch_estimate(sk) AS BIGINT) END"
-    )
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION theta_union_row(a BINARY, b BINARY) "
-        "RETURNS BINARY RETURN CASE WHEN a IS NULL THEN b WHEN b IS NULL THEN a "
-        "ELSE theta_union(a, b) END"
-    )
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION theta_intersection_row("
-        "a BINARY, b BINARY) RETURNS BINARY RETURN "
-        "CASE WHEN a IS NOT NULL AND b IS NOT NULL "
-        "THEN theta_intersection(a, b) END"
-    )
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION theta_difference_row("
-        "a BINARY, b BINARY) RETURNS BINARY RETURN "
-        "CASE WHEN a IS NOT NULL AND b IS NOT NULL "
-        "THEN theta_difference(a, b) END"
-    )
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION kll_row_merge(a BINARY, b BINARY) "
-        "RETURNS BINARY RETURN CASE WHEN a IS NULL THEN b WHEN b IS NULL THEN a "
-        "ELSE kll_sketch_merge_double(a, b) END"
-    )
-    # NB: the rank argument of the JVM built-in must be FOLDABLE, so a
-    # rank-parameterized macro cannot resolve; fixed-rank macros only.
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION kll_median(sk BINARY) "
-        "RETURNS DOUBLE RETURN "
-        "kll_sketch_get_quantile_double(sk, CAST(0.5 AS DOUBLE))"
-    )
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION kll_count(sk BINARY) "
-        "RETURNS BIGINT RETURN CAST(kll_sketch_get_n_double(sk) AS BIGINT)"
-    )
+    pattern, NativeFunctionRegistration.scala:20-26).  Each name resolves,
+    at analysis time, to the expression its DataFrame twin above builds
+    (``hll.register_functions``), so SQL gets the same null algebra.
+    The aggregate forms already have Spark SQL names
+    (``theta_sketch_agg``, ``theta_union_agg``, ``kll_sketch_agg_double``
+    ...)."""
+    register_functions(spark, _SQL_FUNCTIONS)

@@ -1,4 +1,5 @@
-"""StreamLib (``STRM``) HyperLogLogPlus byte-format codec.
+"""StreamLib (``STRM``) HyperLogLogPlus byte format: the one module
+that reads and writes it, and the converter into it (DS -> STRM).
 
 The reference ships two live sketch backends with byte-format
 guarantees — StreamLib and AgKn — and converts between them
@@ -30,6 +31,10 @@ Only NORMAL images are supported: ``HyperLogLogPlus(p)`` — the
 constructor the reference uses — sets sp=0 and never leaves NORMAL
 format.  SPARSE images raise rather than risk a silent misdecode.
 
+``ds_to_strm`` takes a Datasketches image's registers from
+``sketch_codec`` (which owns that format); STRM -> AGKN lives in
+``agkn.py``, the module that owns its output format.
+
 As with DS -> AGKN, converted sketches estimate the same cardinality
 (the registers ARE the state) but must never be *merged* with sketches
 built natively by the other system — different input hash functions
@@ -41,7 +46,8 @@ from __future__ import annotations
 import struct
 
 import numpy as np
-import pandas as pd
+
+from .sketch_codec import ds_registers, register_estimate
 
 _STRM_VERSION = 2
 _FMT_NORMAL = 0
@@ -141,65 +147,16 @@ def strm_from_registers(p: int, registers: np.ndarray) -> bytes:
     )
 
 
-# ---------------------------------------------------------------------------
-# Column-level conversions
-# ---------------------------------------------------------------------------
-
-
-def strm_to_agkn(data: bytes | None, regwidth: int = 6) -> bytes | None:
-    """STRM NORMAL image -> AgKn v1 FULL image (register copy), the
-    direct analogue of the reference's STRM -> AGKN conversion."""
-    from .agkn import agkn_from_registers
-
-    if data is None:
-        return None
-    p, regs = strm_registers(bytes(data))
-    return agkn_from_registers(p, regs, regwidth)
-
-
-def ds_to_strm(data: bytes | None) -> bytes | None:
+def ds_to_strm(data: bytes) -> bytes:
     """Datasketches image -> STRM NORMAL image (register copy)."""
-    from .agkn import ds_registers
-
-    if data is None:
-        return None
-    lg_k, regs = ds_registers(bytes(data))
-    return strm_from_registers(lg_k, regs)
-
-
-def strm_to_agkn_udf(regwidth: int = 6):
-    """Arrow-batched pandas UDF: StreamLib bytes -> AgKn v1 FULL bytes."""
-    from pyspark.sql import functions as F
-
-    @F.pandas_udf("binary")
-    def convert(sketches: pd.Series) -> pd.Series:
-        return pd.Series(
-            [strm_to_agkn(s, regwidth) for s in sketches], dtype=object
-        )
-
-    return convert
-
-
-def ds_to_strm_udf():
-    """Arrow-batched pandas UDF: DS sketch bytes -> StreamLib bytes."""
-    from pyspark.sql import functions as F
-
-    @F.pandas_udf("binary")
-    def convert(sketches: pd.Series) -> pd.Series:
-        return pd.Series([ds_to_strm(s) for s in sketches], dtype=object)
-
-    return convert
+    return strm_from_registers(*ds_registers(bytes(data)))
 
 
 def strm_cardinality(data: bytes) -> float:
-    """HLL estimate from a STRM NORMAL image (stream-lib's NORMAL-mode
-    estimator: bias-corrected raw estimate with linear counting below
-    the small-range threshold) — verification oracle for conversions."""
-    p, regs = strm_registers(data)
-    m = 1 << p
-    alpha = 0.7213 / (1 + 1.079 / m)
-    est = alpha * m * m / np.power(2.0, -regs.astype(np.float64)).sum()
-    zeros = int((regs == 0).sum())
-    if est <= 2.5 * m and zeros > 0:
-        est = m * np.log(m / zeros)
-    return float(est)
+    """HLL estimate of a STRM NORMAL image: ``sketch_codec.register_estimate``
+    of its registers, the classic estimate with linear counting below
+    2.5m.  It is not stream-lib's own HLL+ ``cardinality()``, which
+    also subtracts an empirical bias below 5m: offered the ints 0..49
+    at p=5, stream-lib reads 50 where this reads 53.6, and the ints
+    0..29999 at p=14 read 29,936 against 29,755."""
+    return register_estimate(strm_registers(data)[1])

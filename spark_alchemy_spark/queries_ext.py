@@ -181,15 +181,13 @@ def hll_convert_agkn(spark, sf_dir):
     """hll_convert: DS sketches re-encoded to the postgresql-hll v1 byte
     layout; the AgKn-side estimator must see the same cardinalities.
     reference: HyperLogLogConvert, HLLFunctions.scala:641-670."""
-    from .functions.agkn import agkn_cardinality_udf
-
     (events,) = _t(spark, sf_dir, "events")
     sk = events.groupBy("event_type").agg(
         hll.hll_init_agg("user_id", _EXACT_SD).alias("sk")
     )
     return sk.select(
         "event_type",
-        agkn_cardinality_udf()(hll.hll_convert("sk", "DS", "AGKN")).alias(
+        hll.agkn_cardinality(hll.hll_convert("sk", "DS", "AGKN")).alias(
             "approx_users"
         ),
     )
@@ -208,15 +206,13 @@ def hll_convert_strm(spark, sf_dir):
     the AgKn estimator still sees the exact group cardinalities.
     reference: the STRM half of HyperLogLogConvert
     (HLLFunctions.scala:641-670, codec hll/Implementation.scala:92-102)."""
-    from .functions.agkn import agkn_cardinality_udf
-
     (events,) = _t(spark, sf_dir, "events")
     sk = events.groupBy("event_type").agg(
         hll.hll_init_agg("user_id", _EXACT_SD).alias("sk")
     )
     return sk.select(
         "event_type",
-        agkn_cardinality_udf()(
+        hll.agkn_cardinality(
             hll.hll_convert(hll.hll_convert("sk", "DS", "STRM"), "STRM", "AGKN")
         ).alias("approx_users"),
     )

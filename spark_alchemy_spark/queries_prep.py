@@ -750,7 +750,7 @@ def decile_customer_revenue(spark, sf_dir):
 def sketch_sql_surface(spark, sf_dir):
     """The theta/KLL families driven ENTIRELY from SQL text through the
     registered names (register_sql) — sketches built by the built-in
-    SQL aggregates, read through this engine's macros; exact below
+    SQL aggregates, read through this engine's SQL names; exact below
     capacity so the oracle is plain COUNT(DISTINCT) / quantile_disc."""
     from .functions.sketches import register_sql
 
@@ -764,8 +764,8 @@ def sketch_sql_surface(spark, sf_dir):
                  AS theta_suppliers,
                theta_cardinality(theta_sketch_agg(l_partkey, 16))
                  AS theta_parts,
-               CAST(kll_median(kll_sketch_agg_double(
-                      CAST(l_quantity AS DOUBLE), 65535)) AS BIGINT)
+               CAST(kll_quantile(kll_sketch_agg_double(
+                      CAST(l_quantity AS DOUBLE), 65535), 0.5) AS BIGINT)
                  AS median_qty
         FROM lineitem_sk GROUP BY l_returnflag
         """

@@ -330,10 +330,7 @@ def hll_convert_accuracy(spark, sf_dir):
     * ``chain_consistent`` — DS->AGKN and DS->STRM->AGKN estimates are
       EQUAL: both chains must preserve registers bit-for-bit, so this
       is the exact (not statistical) conversion check."""
-    from .functions.agkn import agkn_cardinality_udf
-
     (events,) = _t(spark, sf_dir, "events")
-    card = agkn_cardinality_udf()
     # two single-row aggregations + crossJoin, NOT one combined agg: a
     # distinct aggregate forces the two-phase Expand plan, which drags
     # the 1 MiB lgK-20 sketch buffer through the distinct shuffle as a
@@ -344,8 +341,8 @@ def hll_convert_accuracy(spark, sf_dir):
     ests = sk.select(
         "exact_n",
         hll.hll_cardinality("sk").alias("ds"),
-        card(hll.hll_convert("sk", "DS", "AGKN")).alias("agkn"),
-        card(
+        hll.agkn_cardinality(hll.hll_convert("sk", "DS", "AGKN")).alias("agkn"),
+        hll.agkn_cardinality(
             hll.hll_convert(hll.hll_convert("sk", "DS", "STRM"), "STRM", "AGKN")
         ).alias("strm"),
     )

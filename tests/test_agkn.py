@@ -14,13 +14,11 @@ from pyspark.sql import functions as F
 from spark_alchemy_spark.functions import hll
 from spark_alchemy_spark.functions.agkn import (
     agkn_cardinality,
-    agkn_cardinality_udf,
     agkn_from_registers,
     agkn_registers,
-    ds_registers,
     ds_to_agkn,
 )
-from spark_alchemy_spark.functions.sketch_codec import row_images
+from spark_alchemy_spark.functions.sketch_codec import ds_registers, row_images
 
 
 def _image(hashes: np.ndarray, lg_k: int) -> bytes:
@@ -82,7 +80,7 @@ def test_hll_convert_column(spark):
         .agg(hll.hll_init_agg("v", 0.0015).alias("sk"))
         .select(
             "g",
-            agkn_cardinality_udf()(hll.hll_convert("sk", "DS", "AGKN")).alias("n"),
+            hll.agkn_cardinality(hll.hll_convert("sk", "DS", "AGKN")).alias("n"),
         )
         .orderBy("g")
         .collect()

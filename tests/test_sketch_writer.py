@@ -17,8 +17,7 @@ from pyspark.sql import functions as F
 
 from spark_alchemy_spark.conf import DEFAULT_ERROR_CONF_KEY
 from spark_alchemy_spark.functions import hll
-from spark_alchemy_spark.functions.agkn import ds_parse
-from spark_alchemy_spark.functions.sketch_codec import row_images
+from spark_alchemy_spark.functions.sketch_codec import ds_parse, row_images
 
 # (lgK, n): n on both sides of each boundary.  lgK < 8 promotes LIST ->
 # dense at the 8th coupon; lgK >= 8 promotes SET -> dense above

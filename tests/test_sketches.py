@@ -3,6 +3,7 @@ the quantile-convention equivalence the oracle entries rely on."""
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from spark_alchemy_spark.functions import sketches as S
@@ -98,6 +99,53 @@ def test_kll_row_merge_null_skip_and_exact(spark):
     assert row["q50"] == 1499.0  # ceil(0.5*3000)-1 = index 1499
     assert row["n_skip"] == 1000
     assert row["nn"] is None
+
+
+@pytest.fixture(scope="module")
+def sketch_view(spark):
+    """One sketch row per g: g=0 has every sketch, g=1 a NULL second
+    theta and KLL sketch, g=2 only NULLs (all-NULL groups)."""
+    S.register_sql(spark)
+    raw = spark.createDataFrame(
+        [
+            (g, v if g < 2 else None, v if g == 0 else None)
+            for g in range(3)
+            for v in range(g * 400, g * 400 + 300)
+        ],
+        "g int, v long, w long",
+    )
+    rows = raw.groupBy("g").agg(
+        S.theta_init_agg("v", 12).alias("a"),
+        S.theta_init_agg(F.col("w") * 2, 12).alias("b"),
+        S.kll_init_agg("v", 200).alias("k"),
+        S.kll_init_agg("w", 200).alias("l"),
+    ).collect()
+    df = spark.createDataFrame(rows, "g int, a binary, b binary, k binary, l binary")
+    df.createOrReplaceTempView("sketch_rows")
+    return df
+
+
+@pytest.mark.parametrize(
+    "sql, dataframe",
+    [
+        ("theta_cardinality(a)", lambda: S.theta_cardinality("a")),
+        ("theta_union_row(a, b)", lambda: S.theta_union_row("a", "b")),
+        ("theta_union_row(a, b, 14)", lambda: S.theta_union_row("a", "b", 14)),
+        ("theta_intersection_row(a, b)", lambda: S.theta_intersection_row("a", "b")),
+        ("theta_difference_row(a, b)", lambda: S.theta_difference_row("a", "b")),
+        ("kll_row_merge(k, l)", lambda: S.kll_row_merge("k", "l")),
+        ("kll_quantile(k, 0.9)", lambda: S.kll_quantile("k", 0.9)),
+        ("kll_quantile(k, 0.5)", lambda: S.kll_quantile("k", 0.5)),
+        ("kll_count(k)", lambda: S.kll_count("k")),
+    ],
+)
+def test_sql_names_match_dataframe_twins(spark, sketch_view, sql, dataframe):
+    """Each theta/KLL SQL name gives what its DataFrame twin gives, NULL
+    rows included; literal arguments reach the twin as numbers."""
+    got = spark.sql(f"SELECT g, {sql} AS r FROM sketch_rows ORDER BY g").collect()
+    expected = sketch_view.select("g", dataframe().alias("r")).orderBy("g").collect()
+    assert got == expected
+    assert expected[2]["r"] is None  # the all-NULL group
 
 
 def test_cms_decode_and_point_queries(spark):

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from spark_alchemy_spark.conf import DEFAULT_ERROR_CONF_KEY
 from spark_alchemy_spark.functions import hll
-from spark_alchemy_spark.functions.agkn import ds_parse
+from spark_alchemy_spark.functions.sketch_codec import ds_parse
 
 
 @pytest.fixture()
@@ -233,7 +233,7 @@ def test_session_relative_sd_resolves_at_analysis(registered):
 
 
 def test_hll_convert_format_names(registered):
-    """Both surfaces take format names through conf.resolve_backend
+    """Both surfaces take format names through conf.sketch_format
     (case-insensitive, 'streamlib' = STRM); in SQL they must be literals."""
     spark = registered
     df = spark.range(200).agg(hll.hll_init_agg("id").alias("sk"))
@@ -247,6 +247,8 @@ def test_hll_convert_format_names(registered):
     assert agkn.collect() == sql.collect()
     with pytest.raises(Exception, match="must be a non-NULL literal"):
         spark.sql("SELECT hll_convert(sk, CAST(rand() AS STRING), 'AGKN') FROM t_convert")
+    with pytest.raises(Exception, match="Unknown sketch byte format '1'"):
+        spark.sql("SELECT hll_convert(sk, 1, 'AGKN') FROM t_convert")
 
 
 def test_pyxxh_matches_jvm_xxhash64(spark):

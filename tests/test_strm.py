@@ -7,6 +7,9 @@ engine's DS execution backend:
   STRM bytes -> registers -> AgKn bytes   (read path, the reference's
                                            own STRM -> AGKN conversion)
   DS bytes   -> STRM bytes                (export path)
+
+Both directions are also checked against the real stream-lib that Spark
+ships: its images read back byte for byte, and it reads ours.
 """
 
 from __future__ import annotations
@@ -14,14 +17,19 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from spark_alchemy_spark.conf import resolve_backend
+from spark_alchemy_spark.conf import sketch_format
 from spark_alchemy_spark.functions import hll
-from spark_alchemy_spark.functions.agkn import agkn_cardinality, ds_registers
+from spark_alchemy_spark.functions.agkn import (
+    agkn_cardinality,
+    agkn_registers,
+    strm_to_agkn,
+)
+from spark_alchemy_spark.functions.sketch_codec import ds_registers
 from spark_alchemy_spark.functions.strm import (
+    ds_to_strm,
     strm_cardinality,
     strm_from_registers,
     strm_registers,
-    strm_to_agkn,
 )
 
 
@@ -125,8 +133,77 @@ def test_sparse_and_bad_images_rejected():
 
 
 def test_resolve_backend_conversion_formats(spark):
-    assert resolve_backend(None, "STRM", for_conversion=True) == "STRM"
-    assert resolve_backend(None, "StreamLib", for_conversion=True) == "STRM"
-    assert resolve_backend(None, "AGKN", for_conversion=True) == "AGKN"
-    with pytest.raises(ValueError, match="not an execution backend"):
-        resolve_backend(None, "STRM")
+    assert sketch_format("STRM") == "STRM"
+    assert sketch_format("StreamLib") == "STRM"
+    assert sketch_format("AGKN") == "AGKN"
+
+
+# ---------------------------------------------------------------------------
+# Against the real stream-lib (the stream-2.9.8 jar Spark ships): images
+# written by HyperLogLogPlus.getBytes, and images read back by
+# HyperLogLogPlus.Builder.build.
+# ---------------------------------------------------------------------------
+
+_HLLP = "com.clearspring.analytics.stream.cardinality.HyperLogLogPlus"
+
+
+def _streamlib_sketch(spark, p: int, n: int):
+    """A JVM ``HyperLogLogPlus(p)`` offered the ints ``0 .. n-1``."""
+    sketch = spark._jvm.com.clearspring.analytics.stream.cardinality.HyperLogLogPlus(p)
+    for i in range(n):
+        sketch.offer(i)
+    return sketch
+
+
+def _streamlib_rebuild(spark, image: bytes) -> bytes:
+    """``HyperLogLogPlus.Builder.build(image).getBytes()``.  py4j cannot
+    reach the nested class's static method by attribute, so it is called
+    by reflection."""
+    jvm = spark._jvm
+    builder = jvm.java.lang.Class.forName(_HLLP + "$Builder")
+    build = next(
+        m for m in builder.getMethods()
+        if m.getName() == "build"
+        and [t.getName() for t in m.getParameterTypes()] == ["[B"]
+    )
+    args = spark.sparkContext._gateway.new_array(jvm.java.lang.Object, 1)
+    args[0] = image
+    return bytes(build.invoke(None, args).getBytes())
+
+
+@pytest.mark.parametrize("n", [0, 1, 100, 30_000])
+@pytest.mark.parametrize("p", [4, 9, 14, 21])
+def test_reads_and_rewrites_streamlib_images(spark, p, n):
+    """A genuine stream-lib image reads back to the same bytes through
+    strm_registers -> strm_from_registers, and hll_convert takes it to
+    an AGKN image holding the same registers."""
+    image = bytes(_streamlib_sketch(spark, p, n).getBytes())
+    back_p, regs = strm_registers(image)
+    assert back_p == p
+    assert strm_from_registers(p, regs) == image
+    df = spark.createDataFrame([(image,)], "strm binary")
+    agkn = df.select(hll.hll_convert("strm", "STRM", "AGKN").alias("a")).first()["a"]
+    log2m, _, agkn_regs = agkn_registers(bytes(agkn))
+    assert log2m == p
+    assert np.array_equal(agkn_regs, regs)
+
+
+@pytest.mark.parametrize("n", [100, 30_000])
+@pytest.mark.parametrize("lg_k", [4, 9, 12, 21])
+def test_streamlib_reads_ds_to_strm_output(spark, lg_k, n):
+    """ds_to_strm's image, read by stream-lib's Builder.build and
+    serialized again, comes back byte for byte."""
+    from pyspark.sql import functions as F
+
+    ds = spark.range(n).agg(F.hll_sketch_agg(F.xxhash64("id"), F.lit(lg_k)).alias("sk"))
+    image = ds_to_strm(bytes(ds.first()["sk"]))
+    assert _streamlib_rebuild(spark, image) == image
+
+
+@pytest.mark.parametrize("p, n", [(4, 1000), (5, 2000), (6, 5000)])
+def test_strm_cardinality_is_streamlib_estimate_above_5m(spark, p, n):
+    """Above 5m stream-lib applies no bias correction, so its estimate
+    is the shared register estimate, rounded (the alpha table for
+    m = 16, 32, 64 included)."""
+    sketch = _streamlib_sketch(spark, p, n)
+    assert round(strm_cardinality(bytes(sketch.getBytes()))) == sketch.cardinality()
