@@ -5,8 +5,9 @@ algebra) extended with large-scale training-data pipeline operators
 
 Everything is expressed through the DataFrame/SQL API so Catalyst and
 Tungsten own the physical plan; Python appears only in Arrow-batched
-UDFs where Spark has no built-in (per-row sketch bytes, byte-format
-interop, stubbed media decoders).
+UDFs where Spark has no built-in (byte-format interop, stubbed media
+decoders).  The per-row sketch writer is one compiled Java UDF
+(``functions/RowSketch.java``).
 """
 
 from . import functions, multimodal, operators, sources, streaming

@@ -73,12 +73,21 @@ def agkn_from_registers(lg_k: int, registers: np.ndarray, regwidth: int = _REGWI
 
 def agkn_registers(data: bytes) -> tuple[int, int, np.ndarray]:
     """Parse an AgKn v1 FULL image of any regwidth back to
-    ``(log2m, regwidth, registers)``."""
+    ``(log2m, regwidth, registers)``.  The image may come from outside,
+    so its length is checked against what its header declares."""
+    if len(data) < 3:
+        raise ValueError(f"not an AgKn v1 FULL image: expected 3 header bytes, got {len(data)}")
     if (data[0] >> 4) != _AGKN_VERSION or (data[0] & 0xF) != _AGKN_TYPE_FULL:
         raise ValueError("not an AgKn v1 FULL image")
     regwidth = ((data[1] >> 5) & 0x7) + 1
     log2m = data[1] & 0x1F
     m = 1 << log2m
+    payload = -(-m * regwidth // 8)
+    if len(data) - 3 < payload:
+        raise ValueError(
+            f"truncated AgKn v1 FULL image: log2m {log2m} and regwidth {regwidth} "
+            f"need {payload} payload bytes, got {len(data) - 3}"
+        )
     bits = np.unpackbits(np.frombuffer(data, dtype=np.uint8, offset=3))
     bits = bits[: m * regwidth].reshape(m, regwidth)
     shifts = np.arange(regwidth - 1, -1, -1, dtype=np.uint16)

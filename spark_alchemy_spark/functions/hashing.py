@@ -14,8 +14,9 @@ built-in functions:
   [a, null] != [null, a];  {} != {null: null};
   struct(null, a) != struct(a, null)     (FIXTURES.md F5)
 
-Design contract (used by both the JVM aggregate path and the Arrow UDF
-per-row sketch writer, ``sketch_codec.row_images``):
+Design contract (used by both the aggregate path, ``hll_sketch_agg``,
+and the per-row sketch writer, ``RowSketch.java``; both feed the hash to
+Datasketches ``update(long)``):
 
 * a **non-null primitive** hashes to ``xxhash64(value)`` (Spark seed 42);
 * a **null nested inside a collection/struct** hashes to ``NULL_HASH``
@@ -46,7 +47,7 @@ from pyspark.sql import types as T
 
 # Fixed 64-bit tags.  Arbitrary odd constants, distinct from each other;
 # they only need to be stable (they are part of the sketch-bytes contract
-# between the JVM path and the Python per-row path).
+# between the aggregate and the per-row paths).
 NULL_HASH = -7046029254386353131
 ARRAY_SEED = 4868644678621849277
 MAP_SEED = -8601341657237400911

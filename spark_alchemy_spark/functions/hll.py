@@ -13,9 +13,9 @@ keys:
   ===========================  =====================================
   reference SQL name           engine implementation
   ===========================  =====================================
-  hll_init                     Arrow UDF over the JVM cardinality
-                               hash; sketch_codec.row_images writes
-                               the bytes (no shuffle)
+  hll_init                     JVM UDF RowSketch (Datasketches
+                               HllSketch, RowSketch.java) over the
+                               cardinality hash (no shuffle)
   hll_init_collection          same, over the per-element hashes
   hll_init_agg                 hll_sketch_agg  (+ null-algebra guard)
   hll_init_collection_agg      hll_union_agg over per-row collection
@@ -42,21 +42,22 @@ Null algebra reproduced from the reference:
 All value inputs are first normalized to a 64-bit "cardinality hash"
 (see ``hashing.py``) so that every Spark type — including arrays, maps
 and structs, which Spark's built-in sketch functions reject — sketches
-consistently across the scalar (Python) and aggregate (JVM) paths.
+consistently across the per-row and aggregate paths, both in the JVM.
 """
 
 from __future__ import annotations
 
 import functools
 
-import numpy as np
 import pyarrow as pa  # module-level: arrow_udf type hints resolve here
-import pyarrow.compute as pc
+from py4j.java_gateway import JavaClass
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.classic.column import _to_seq
 from pyspark.sql.functions import arrow_udf
 from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.utils import get_active_spark_context
 
 from ..conf import (
     DEFAULT_ERROR_CONF_KEY,
@@ -66,7 +67,6 @@ from ..conf import (
 )
 from . import agkn, strm
 from .hashing import cardinality_hash, element_hashes
-from .sketch_codec import row_images
 
 __all__ = [
     "hll_init",
@@ -107,50 +107,36 @@ def _lg_k(relative_sd: float | None) -> int:
 
 
 # ---------------------------------------------------------------------------
-# Per-row scalar init (Arrow-batched sketch-byte writer; zero shuffle)
+# Per-row scalar init (one JVM UDF over Datasketches HllSketch; zero shuffle)
 # ---------------------------------------------------------------------------
 
 
-def _split_rows(v: pa.Array, elements: bool):
-    """Lay an Arrow batch out for :func:`sketch_codec.row_images`:
-    ``(values, row index of each value, row NULL mask)``.
-
-    With ``elements`` each row is a list whose non-null elements are its
-    values (null elements are skipped, the reference's offer rule,
-    HLLFunctions.scala:107-108); otherwise each non-null row is one value.
-    """
-    v = v.combine_chunks() if isinstance(v, pa.ChunkedArray) else v
-    null_mask = pc.is_null(v).to_numpy(zero_copy_only=False)
-    if not elements:
-        return pc.drop_null(v), np.flatnonzero(~null_mask), null_mask
-    values, rows = pc.list_flatten(v), pc.list_parent_indices(v)
-    if values.null_count:
-        valid = pc.is_valid(values)
-        values, rows = values.filter(valid), rows.filter(valid)
-    return values, rows.to_numpy(zero_copy_only=False), null_mask
-
-
-@functools.lru_cache(maxsize=None)
-def _hashed_rows_udf(lg_k: int, elements: bool):
-    """Arrow UDF: JVM cardinality hashes (BIGINT, or ``array<bigint>``
-    element hashes when ``elements``) -> one sketch per row."""
-
-    @arrow_udf("binary")
-    def sketch_rows(v: pa.Array) -> pa.Array:
-        hashes, rows, null_mask = _split_rows(v, elements)
-        return row_images(hashes.to_numpy(zero_copy_only=False), rows, null_mask, lg_k)
-
-    return sketch_rows
+def _row_sketch(hashes: Column, lg_k: int) -> Column:
+    """``RowSketch.java`` over each row's ``array<bigint>`` of hashes: the
+    bytes a one-partition ``hll_sketch_agg`` writes for them, in order
+    (HIP included); NULL array -> NULL."""
+    sc = get_active_spark_context()
+    row_sketch = sc._jvm.spark_alchemy.RowSketch
+    if not isinstance(row_sketch, JavaClass):
+        raise RuntimeError(
+            "hll_init* need spark_alchemy.RowSketch on the JVM classpath: build "
+            "the session with spark_alchemy_spark.session.build_session, which "
+            "compiles it, or start the JVM with spark.jars=session.row_sketch_jar()"
+        )
+    binary = sc._jvm.org.apache.spark.sql.types.DataTypes.BinaryType
+    judf = sc._jvm.org.apache.spark.sql.functions.udf(row_sketch(), binary)
+    return Column(judf.apply(_to_seq(sc, [hashes._jc, F.lit(lg_k)._jc])))
 
 
 def hll_init(col, relative_sd: float | None = None, dtype: T.DataType | None = None) -> Column:
-    """Per-row sketch of one value; NULL in -> NULL out.
+    """Per-row sketch of one value (:func:`_row_sketch` of its hash);
+    NULL in -> NULL out.
 
     reference: HyperLogLogInitSimple, HLLFunctions.scala:192-218.
     ``dtype`` is required only for array/map/struct inputs.
     """
     h = cardinality_hash(_col(col), dtype)
-    return _hashed_rows_udf(_lg_k(relative_sd), False)(h)
+    return _row_sketch(F.when(h.isNotNull(), F.array(h)), _lg_k(relative_sd))
 
 
 def hll_init_collection(
@@ -159,12 +145,12 @@ def hll_init_collection(
     """Per-row sketch of a collection's *elements* (map: k->v entries).
 
     Null elements are skipped, an empty collection yields a cardinality-0
-    sketch, a NULL collection yields NULL.
+    sketch, a NULL collection yields NULL (:func:`_row_sketch`).
     reference: HyperLogLogInitCollection, HLLFunctions.scala:294-321,
     offer logic :103-124.
     """
     hashes = element_hashes(_col(col), dtype)
-    return _hashed_rows_udf(_lg_k(relative_sd), True)(hashes)
+    return _row_sketch(hashes, _lg_k(relative_sd))
 
 
 # ---------------------------------------------------------------------------

@@ -1,23 +1,13 @@
-"""Apache Datasketches HLL sketch images: the one module that reads and
-writes them.
+"""Apache Datasketches HLL sketch images, read and written in Python.
 
-Spark >=3.5 executes HLL aggregation with Apache Datasketches
-(``hll_sketch_agg`` / ``hll_union_agg`` / ``hll_union`` /
-``hll_sketch_estimate``).  Those built-ins cover every *aggregate* use,
-but the reference also ships per-row scalar sketch builders
-(``hll_init`` / ``hll_init_collection``, reference
-alchemy/.../hll/HLLFunctions.scala:192-218, :294-321) for which Spark has
-no built-in.  Running an aggregate per row would shuffle the whole table;
-instead :func:`row_images` builds the serialized sketch bytes of a whole
-Arrow batch at once.  It is the one per-row writer: ``hll_init`` /
-``hll_init_collection`` call it, from the DataFrame API and from SQL
-text alike (``hll.register`` resolves SQL names to the same Columns).
-The bytes are *bit-compatible* with Datasketches' updatable serialization,
-so the JVM built-ins union and estimate them natively.
-``tests/test_sketch_writer.py::test_writer_matches_hll_sketch_agg``
-checks this: at every tested size, on both sides of each promotion
-boundary, the writer holds the same coupons (or the same registers) as
-``hll_sketch_agg`` over the same values.
+Spark >=3.5 runs HLL aggregation with Apache Datasketches, and the
+per-row ``hll_init*`` run the same library's ``HllSketch`` in the JVM
+(``RowSketch.java``), so this module writes no image the engine produces.
+Its write side (:func:`coupons_for_longs`, :func:`serialize_coupons`,
+:func:`coupon_image`, :func:`union_images`) stays for the benchmark's
+kernel metrics and for tests that build LIST/SET/dense images without a
+JVM; the images are bit-compatible with Datasketches' updatable
+serialization, so the JVM built-ins union and estimate them natively.
 
 The read side, :func:`ds_parse` / :func:`ds_registers`, is what the
 interop transcoders start from: ``agkn.py`` (postgresql-hll) and
@@ -51,7 +41,6 @@ from __future__ import annotations
 import struct
 
 import numpy as np
-import pyarrow as pa
 
 MURMUR_SEED = 9001  # datasketches DEFAULT_UPDATE_SEED
 _C1 = 0x87C37B91114253D5
@@ -360,37 +349,3 @@ def coupon_image(coupons: np.ndarray, lg_k: int) -> bytes:
     if len(coupons) > capacity:
         return serialize_dense(lg_k, coupons_to_registers(coupons, lg_k))
     return serialize_coupons(coupons.tolist(), lg_k)
-
-
-def row_images(
-    hashes: np.ndarray, rows: np.ndarray, null_mask: np.ndarray, lg_k: int
-) -> pa.Array:
-    """One sketch image per row of a batch.
-
-    ``hashes`` are the batch's 64-bit cardinality hashes, ``rows[i]`` is
-    the index of the row ``hashes[i]`` belongs to, and ``null_mask``
-    flags the NULL rows, which stay NULL.  A non-null row with no hashes
-    gets the empty sketch (cardinality 0, the reference's
-    empty-collection rule, HLLFunctions.scala:105-111).  Each row's
-    distinct coupons go through :func:`coupon_image`, except a row with
-    exactly one coupon (every ``hll_init`` row): that row is the one
-    constant single-coupon LIST image with its coupon word patched in.
-    """
-    coupons = coupons_for_longs(hashes)
-    order = np.lexsort((coupons, rows))
-    r, c = rows[order], coupons[order]
-    keep = np.ones(len(r), dtype=bool)
-    keep[1:] = (r[1:] != r[:-1]) | (c[1:] != c[:-1])
-    r, c = r[keep], c[keep]
-    bounds = np.searchsorted(r, np.arange(len(null_mask) + 1)).tolist()
-    one = serialize_coupons((0,), lg_k)
-    head, tail = one[:8], one[12:]
-    words = c.tolist()
-    out = [None] * len(null_mask)
-    for i in np.flatnonzero(~null_mask).tolist():
-        lo, hi = bounds[i], bounds[i + 1]
-        if hi - lo == 1:
-            out[i] = head + struct.pack("<I", words[lo]) + tail
-        else:
-            out[i] = coupon_image(c[lo:hi], lg_k)
-    return pa.array(out, type=pa.binary())

@@ -40,7 +40,7 @@ def _sink_name(prefix: str) -> str:
     """,
 )
 def hll_init_scalar_merge(spark, sf_dir):
-    """Per-row scalar hll_init (Arrow sketch-byte writer, no shuffle)
+    """Per-row scalar hll_init (JVM RowSketch writer, no shuffle)
     merged per group — the zero-aggregation init path.
     reference: HyperLogLogInitSimple, HLLFunctions.scala:192-218."""
     (events,) = _t(spark, sf_dir, "events")

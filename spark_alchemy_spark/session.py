@@ -16,14 +16,46 @@ The open cost is lowered from 4 MiB to 1 MiB so that a file of
 core-sized row groups gets one task per row group instead of leaving a
 core idle (arithmetic at ``spark.sql.files.openCostInBytes`` below).
 Callers can override it through ``extra_conf``.
+
+``hll_init`` / ``hll_init_collection`` run one Java class,
+``functions/RowSketch.java``.  :func:`row_sketch_jar` compiles it with the
+local ``javac`` (~1.3 s) and caches the jar in ``tempfile.gettempdir()``
+under a hash of the source and ``pyspark.__version__``; delete that jar to
+force a rebuild.  ``build_session`` appends it to ``spark.jars``.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
+import subprocess
 import tempfile
 
+import pyspark
 from pyspark.sql import SparkSession
+
+_JAVA_SOURCE = os.path.join(os.path.dirname(__file__), "functions", "RowSketch.java")
+#: the pyspark ``jars/`` entries RowSketch compiles against
+_CLASSPATH = ("datasketches-java-", "datasketches-memory-", "spark-sql-api_", "scala-library-")
+
+
+def row_sketch_jar() -> str:
+    """The cached jar of ``spark_alchemy.RowSketch``, compiled on first
+    use and renamed into place, so no process reads a partial jar."""
+    with open(_JAVA_SOURCE, "rb") as f:
+        key = hashlib.sha256(f.read() + pyspark.__version__.encode()).hexdigest()
+    jar = os.path.join(tempfile.gettempdir(), f"spark_alchemy_rowsketch_{key[:16]}.jar")
+    if os.path.exists(jar):
+        return jar
+    if shutil.which("javac") is None:
+        raise RuntimeError(f"build_session compiles {_JAVA_SOURCE} and needs javac on PATH")
+    jars = os.path.join(os.path.dirname(pyspark.__file__), "jars")
+    cp = [os.path.join(jars, n) for n in os.listdir(jars) if n.startswith(_CLASSPATH)]
+    with tempfile.TemporaryDirectory() as out:
+        subprocess.run(["javac", "-d", out, "-cp", os.pathsep.join(cp), _JAVA_SOURCE], check=True)
+        os.replace(shutil.make_archive(f"{jar}.{os.getpid()}", "zip", out), jar)
+    return jar
 
 
 def build_session(
@@ -42,13 +74,13 @@ def build_session(
             pkg_root + (os.pathsep + existing if existing else "")
         )
     conf = dict(extra_conf or {})
+    jars = [j for j in (conf.pop("spark.jars", None), row_sketch_jar()) if j]
     derby_home = os.path.join(tempfile.gettempdir(), f"derby_home_{os.getpid()}")
     if not os.path.isdir(derby_home):
         os.makedirs(derby_home, exist_ok=True)
         # the metastore is worthless after this process dies; reap it so
         # per-pid isolation doesn't leak one Derby tree per run
         import atexit
-        import shutil
 
         atexit.register(shutil.rmtree, derby_home, ignore_errors=True)
     # In local mode the driver JVM IS the cluster.  4g (not more): on
@@ -64,6 +96,7 @@ def build_session(
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
         .config("spark.driver.memory", driver_mem)
+        .config("spark.jars", ",".join(jars))
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -77,10 +110,7 @@ def build_session(
         # fact-fact joins that must stay sort-merge exceed it).  Same
         # results, fewer sorts.
         .config("spark.sql.join.preferSortMergeJoin", "false")
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP", "64m"),
-        )
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
         # I/O (guide §6): zstd parquet — smaller files than snappy at
         # similar read speed; applies to every temp tree the lifecycle
         # entries write and to user outputs alike

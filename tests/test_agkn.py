@@ -18,13 +18,16 @@ from spark_alchemy_spark.functions.agkn import (
     agkn_registers,
     ds_to_agkn,
 )
-from spark_alchemy_spark.functions.sketch_codec import ds_registers, row_images
+from spark_alchemy_spark.functions.sketch_codec import (
+    coupon_image,
+    coupons_for_longs,
+    ds_registers,
+)
 
 
 def _image(hashes: np.ndarray, lg_k: int) -> bytes:
-    """The per-row writer's image of one row holding ``hashes``."""
-    rows = np.zeros(len(hashes), dtype=np.int64)
-    return row_images(hashes, rows, np.array([False]), lg_k)[0].as_py()
+    """The codec's Datasketches image of a sketch holding ``hashes``."""
+    return coupon_image(np.unique(coupons_for_longs(hashes)), lg_k)
 
 
 def test_conversion_accuracy_10k(spark):
@@ -61,8 +64,8 @@ def test_register_roundtrip(spark, n, lgk):
 
 
 def test_python_list_set_images_convert():
-    """Our per-row writer's LIST and SET images convert too (hll_init
-    output is convertible without touching the JVM)."""
+    """The Python codec's LIST and SET images convert too (a coupon
+    image converts without touching the JVM)."""
     for n in (0, 3, 20, 500):
         b = _image(np.arange(n, dtype=np.int64) * 2654435761, 14)
         est = agkn_cardinality(ds_to_agkn(b))
@@ -131,6 +134,20 @@ def test_agkn_golden_single_register():
     # re-encode must be byte-identical (same metadata choice as the
     # reference: explicit off, sparse off -> 0x00)
     assert agkn_from_registers(4, np.array(regs, dtype=np.uint8)) == golden
+
+
+@pytest.mark.parametrize(
+    "image,expected,actual",
+    [(bytes([0x14, 0xA4, 0x00, 0x04]), 12, 1), (bytes([0x14, 0xA4]), 3, 2)],
+    ids=["payload_short", "header_short"],
+)
+def test_agkn_truncated_image_is_a_format_error(image, expected, actual):
+    """A truncated outside image fails with a format error naming the
+    expected and actual lengths, not a numpy reshape error: ``14 A4 00
+    04`` declares 16 six-bit registers (12 payload bytes) and holds 1; a
+    2-byte image is shorter than the 3-byte header."""
+    with pytest.raises(ValueError, match=f"AgKn.*{expected}.*{actual}"):
+        agkn_registers(image)
 
 
 def test_agkn_golden_postgres_default_metadata_byte():

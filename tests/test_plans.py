@@ -5,6 +5,8 @@ jobs run."""
 
 from __future__ import annotations
 
+import re
+
 from spark_alchemy_spark import plans
 from spark_alchemy_spark.queries import QUERIES
 
@@ -56,13 +58,38 @@ def test_hll_aggregate_path_is_pure_jvm(spark):
         assert plans.codegen_stage_count(df) >= 1, name
 
 
-def test_hll_scalar_init_is_arrow_batched(spark):
-    """The per-row init path is Python by design, but must be the
-    Arrow-vectorized operator, never row-at-a-time pickling."""
-    df = QUERIES["hll_init_scalar_merge"](spark, SF)
-    ops = plans.python_eval_ops(df)
-    assert "ArrowEvalPython" in ops
-    assert "BatchEvalPython" not in ops
+def test_hll_init_paths_are_pure_jvm(spark):
+    """The per-row inits run in the JVM writer (``RowSketch.java``), so
+    ``hll_init`` / ``hll_init_collection`` / ``hll_init_collection_agg``
+    plan no Python operator, built with the DataFrame API or resolved from
+    SQL text.  ``hll_sql_surface`` also runs ``hll_convert``, whose Arrow
+    UDF (``per_value``) must be the only Python it plans."""
+    from spark_alchemy_spark.functions import hll
+
+    hll.register(spark)
+    rows = spark.createDataFrame([(1, [1, 2]), (None, None)], "x bigint, xs array<bigint>")
+    rows.createOrReplaceTempView("plan_rows")
+    dfs = {
+        name: QUERIES[name](spark, SF)
+        for name in (
+            "hll_init_scalar_merge",
+            "hll_init_collection_words",
+            "hll_init_collection_agg_words",
+            "hll_sql_surface_collections",
+        )
+    }
+    dfs["sql per-row"] = spark.sql(
+        "SELECT hll_init(x), hll_init_collection(xs) FROM plan_rows"
+    )
+    dfs["sql collection agg"] = spark.sql(
+        "SELECT hll_init_collection_agg(xs) FROM plan_rows"
+    )
+    for name, df in dfs.items():
+        assert plans.python_eval_ops(df) == [], name
+    plan = plans.formatted_plan(QUERIES["hll_sql_surface"](spark, SF))
+    udf_args = re.findall(r"EvalPython\nInput .*\nArguments: (.*)", plan)
+    assert udf_args, plan
+    assert all(set(re.findall(r"(\w+)\(", a)) == {"per_value"} for a in udf_args), udf_args
 
 
 def test_minhash_reuses_signature_exchange(spark):

@@ -1,23 +1,32 @@
-"""The per-row sketch writer (``sketch_codec.row_images``) against the
-JVM and across surfaces.
+"""The per-row sketch writer (``RowSketch.java``, behind ``hll_init`` /
+``hll_init_collection``) against the JVM aggregate and across surfaces.
 
-1. For the same values, the writer holds the same coupons — or, once
-   promoted, the same dense registers — as Spark's ``hll_sketch_agg``,
-   on both sides of every Datasketches promotion boundary.
+1. For the same hashes in the same order, ``hll_init_collection``
+   writes the bytes Spark's one-partition ``hll_sketch_agg`` writes, on
+   both sides of every Datasketches promotion boundary.
 2. The DataFrame and SQL ``hll_init`` / ``hll_init_collection`` write
    byte-identical images, NULL / empty / null-element / large rows
    included.
+3. Without ``javac``, building the writer fails with an error naming it
+   before any JVM starts; without the writer's class, ``hll_init*``
+   fails with an error naming ``build_session``.
 """
 
 from __future__ import annotations
 
-import numpy as np
+import tempfile
+import types
+
 import pytest
 from pyspark.sql import functions as F
 
-from spark_alchemy_spark.conf import DEFAULT_ERROR_CONF_KEY
+from spark_alchemy_spark import session
+from spark_alchemy_spark.conf import (
+    DEFAULT_ERROR_CONF_KEY,
+    error_from_precision,
+    precision_from_error,
+)
 from spark_alchemy_spark.functions import hll
-from spark_alchemy_spark.functions.sketch_codec import ds_parse, row_images
 
 # (lgK, n): n on both sides of each boundary.  lgK < 8 promotes LIST ->
 # dense at the 8th coupon; lgK >= 8 promotes SET -> dense above
@@ -31,23 +40,50 @@ BOUNDARY_CASES = [
 ]
 
 
-@pytest.mark.parametrize("lg_k,n", BOUNDARY_CASES)
+def _relative_sd(lg_k: int) -> float:
+    """A relativeSD that ``precision_from_error`` maps to ``lg_k``."""
+    sd = error_from_precision(lg_k) * 1.01
+    assert precision_from_error(sd) == lg_k
+    return sd
+
+
+@pytest.mark.parametrize("lg_k,n", BOUNDARY_CASES + [(9, 0)])
 def test_writer_matches_hll_sketch_agg(spark, lg_k, n):
-    hashed = spark.range(0, n, 1, 1).select(F.xxhash64("id").alias("h"))
-    jvm = bytes(
-        hashed.agg(F.hll_sketch_agg("h", F.lit(lg_k))).collect()[0][0]
-    )
-    hashes = np.array([r["h"] for r in hashed.collect()], dtype=np.int64)
-    ours = row_images(
-        hashes, np.zeros(n, dtype=np.int64), np.array([False]), lg_k
-    )[0].as_py()
-    jvm_kind, jvm_lg, jvm_payload = ds_parse(jvm)
-    kind, lg, payload = ds_parse(ours)
-    assert (kind, lg) == (jvm_kind, jvm_lg)
-    if kind == "coupons":
-        assert np.array_equal(np.sort(payload), np.sort(jvm_payload))
-    else:
-        assert np.array_equal(payload, jvm_payload)
+    """Byte-equality law: the per-row image of the hashes of ``0..n-1``
+    is the image ``hll_sketch_agg`` builds from the same hashes in the
+    same order, HIP accumulator and flags included."""
+    jvm = spark.range(0, n, 1, 1).agg(
+        F.hll_sketch_agg(F.xxhash64("id"), F.lit(lg_k))
+    ).collect()[0][0]
+    ids = F.sequence(F.lit(0).cast("bigint"), F.lit(n - 1).cast("bigint"))
+    if not n:  # sequence(0, -1) counts down; zero ids is the empty array
+        ids = F.array().cast("array<bigint>")
+    ours = spark.range(1).select(
+        hll.hll_init_collection(ids, _relative_sd(lg_k))
+    ).collect()[0][0]
+    assert bytes(ours) == bytes(jvm)
+
+
+def test_missing_javac_is_named(monkeypatch, tmp_path):
+    """With no cached jar and no ``javac`` on PATH, the jar helper names
+    ``javac`` (it runs before ``build_session`` starts a JVM)."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setenv("PATH", "")
+    with pytest.raises(RuntimeError, match="javac"):
+        session.row_sketch_jar()
+    assert list(tmp_path.iterdir()) == []
+
+
+def test_session_without_writer_names_build_session(spark, monkeypatch):
+    """A JVM that lacks ``spark_alchemy.RowSketch`` (a session not built
+    by ``build_session``) gets an error naming ``build_session``, not
+    py4j's "'JavaPackage' object is not callable"."""
+    no_jar = types.SimpleNamespace(spark_alchemy=spark._jvm.no_such_package)
+    no_jar_context = types.SimpleNamespace(_jvm=no_jar)
+    monkeypatch.setattr(hll, "get_active_spark_context", lambda: no_jar_context)
+    for init in (hll.hll_init, hll.hll_init_collection):
+        with pytest.raises(RuntimeError, match="build_session"):
+            init("x")
 
 
 @pytest.fixture()

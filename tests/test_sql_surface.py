@@ -302,11 +302,14 @@ def test_dense_image_readable_by_spark(spark):
     """serialize_dense output must be readable by Spark's JVM
     Datasketches expressions (estimate + union)."""
     from spark_alchemy_spark.functions.pyxxh import xxh64_longs
-    from spark_alchemy_spark.functions.sketch_codec import row_images, union_images
+    from spark_alchemy_spark.functions.sketch_codec import (
+        coupon_image,
+        coupons_for_longs,
+        union_images,
+    )
 
     def image(hashes, lg_k):
-        rows = np.zeros(len(hashes), dtype=np.int64)
-        return row_images(hashes, rows, np.array([False]), lg_k)[0].as_py()
+        return coupon_image(np.unique(coupons_for_longs(hashes)), lg_k)
 
     hashes = xxh64_longs(np.arange(5000, dtype=np.int64))
     img = image(hashes, 12)  # dense: 5000 > 3 * 2^(12-5)
