@@ -57,26 +57,29 @@ STRUCT_SEED = 2863050554762567121
 #: (CardinalityHashFunction.scala:24-25).  Strings keep the plain
 #: xxhash64 so existing sketches stay stable.
 BINARY_SEED = 6364136223846793005
+_NEEDS_DTYPE = (
+    "nested (array/map/struct) input needs dtype= to hash null elements distinctly"
+)
 
 
 def _col(c) -> Column:
     return c if isinstance(c, Column) else F.col(c)
 
 
-def is_primitive(dtype: T.DataType) -> bool:
-    return not isinstance(dtype, (T.ArrayType, T.MapType, T.StructType))
-
-
 def _primitive_hash(c: Column) -> Column:
     """xxhash64 with the string/binary type distinction: BINARY values
     hash through a tagged seed chain (``xxhash64(BINARY_SEED, c)``),
-    everything else through plain ``xxhash64(c)``.  ``typeof`` is
-    foldable, so Catalyst collapses the CASE to a single branch at plan
-    time — no per-row dispatch survives in the physical plan."""
-    return F.when(
-        F.typeof(c) == F.lit("binary"),
-        F.xxhash64(F.lit(BINARY_SEED), c),
-    ).otherwise(F.xxhash64(c))
+    everything else through plain ``xxhash64(c)``.  A nested value
+    raises an error naming ``dtype``: plain ``xxhash64`` skips null
+    elements and fields, so ``[]`` and ``[null]`` would collide.
+    ``typeof`` is foldable, so Catalyst collapses the CASE to a single
+    branch at plan time — no per-row dispatch survives in the plan."""
+    t = F.typeof(c)
+    return (
+        F.when(t.rlike("^(array|map|struct)<"), F.raise_error(F.lit(_NEEDS_DTYPE)))
+        .when(t == F.lit("binary"), F.xxhash64(F.lit(BINARY_SEED), c))
+        .otherwise(F.xxhash64(c))
+    )
 
 
 def _nested_hash(c: Column, dtype: T.DataType) -> Column:
@@ -84,8 +87,8 @@ def _nested_hash(c: Column, dtype: T.DataType) -> Column:
     return F.when(c.isNull(), F.lit(NULL_HASH)).otherwise(_value_hash(c, dtype))
 
 
-def _value_hash(c: Column, dtype: T.DataType) -> Column:
-    """Hash of a non-null value of ``dtype`` to BIGINT."""
+def _value_hash(c: Column, dtype: T.DataType | None) -> Column:
+    """Hash of a non-null value of ``dtype`` (None: a primitive) to BIGINT."""
     if isinstance(dtype, T.ArrayType):
         elem = dtype.elementType
         return F.aggregate(
@@ -124,13 +127,10 @@ def cardinality_hash(col, dtype: T.DataType | None = None) -> Column:
     inits can propagate it — reference HLLFunctions.scala:135-142).
 
     ``dtype`` is required for array/map/struct columns (PySpark Columns
-    carry no type); primitives need no dtype.
+    carry no type; without it a nested value raises an error naming
+    ``dtype``); primitives need no dtype.
     """
     c = _col(col)
-    if dtype is None or is_primitive(dtype):
-        return F.when(c.isNull(), F.lit(None).cast("long")).otherwise(
-            _primitive_hash(c)
-        )
     return F.when(c.isNull(), F.lit(None).cast("long")).otherwise(_value_hash(c, dtype))
 
 
@@ -156,8 +156,6 @@ def element_hashes(col, dtype: T.DataType | None = None) -> Column:
         )
     elem = dtype.elementType if isinstance(dtype, T.ArrayType) else None
     nonnull = F.filter(c, lambda x: x.isNotNull())
-    if elem is None or is_primitive(elem):
-        return F.transform(nonnull, lambda x: _primitive_hash(x))
     return F.transform(nonnull, lambda x: _value_hash(x, elem))
 
 

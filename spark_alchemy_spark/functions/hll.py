@@ -17,11 +17,12 @@ keys:
                                HllSketch, RowSketch.java) over the
                                cardinality hash (no shuffle)
   hll_init_collection          same, over the per-element hashes
-  hll_init_agg                 hll_sketch_agg  (+ null-algebra guard)
+  hll_init_agg                 hll_sketch_agg  (+ empty-group guard)
   hll_init_collection_agg      hll_union_agg over per-row collection
                                sketches
-  hll_merge                    hll_union_agg   (+ null-algebra guard)
-  hll_row_merge                hll_union folded with null-skip
+  hll_merge                    hll_union_agg   (+ empty-group guard)
+  hll_row_merge                one aggregate() over the row's array:
+                               null-skip left fold of hll_union
   hll_cardinality              hll_sketch_estimate
   hll_intersect_cardinality    inclusion-exclusion composition
   hll_convert                  Arrow UDF over one per-value
@@ -38,6 +39,8 @@ Null algebra reproduced from the reference:
 * scalar init of NULL -> NULL (nullable = child.nullable, :192-218);
 * row-merge skips null sketches, all-null row -> NULL (:486-499);
 * intersection: both NULL -> NULL, one NULL -> 0 (:604-611).
+The first and third rules are :func:`null_guarded_agg` and
+:func:`null_skip_row_fold`, shared with theta and KLL (``sketches.py``).
 
 All value inputs are first normalized to a 64-bit "cardinality hash"
 (see ``hashing.py``) so that every Spark type — including arrays, maps
@@ -66,7 +69,7 @@ from ..conf import (
     sketch_format,
 )
 from . import agkn, strm
-from .hashing import cardinality_hash, element_hashes
+from .hashing import _col, cardinality_hash, element_hashes
 
 __all__ = [
     "hll_init",
@@ -85,10 +88,6 @@ __all__ = [
 ]
 
 
-def _col(c) -> Column:
-    return c if isinstance(c, Column) else F.col(c)
-
-
 def _lg_k(relative_sd: float | None) -> int:
     """Error resolution with the reference's precedence: explicit arg >
     session conf (``spark.alchemy.hll.relativeSD``) > 0.05 default
@@ -103,6 +102,33 @@ def _lg_k(relative_sd: float | None) -> int:
                 relative_sd = float(conf_sd)
     return precision_from_error(
         DEFAULT_RELATIVE_SD if relative_sd is None else relative_sd
+    )
+
+
+# ---------------------------------------------------------------------------
+# Null algebra shared by every sketch family
+# ---------------------------------------------------------------------------
+
+
+def null_guarded_agg(agg: Column, values: Column) -> Column:
+    """``agg`` where the group has a non-NULL ``values``, else NULL: an
+    empty or all-NULL group gives a NULL sketch (HLLFunctions.scala:
+    158-159), where Spark's sketch aggregates give an empty one."""
+    return F.when(F.count(values) > 0, agg)
+
+
+def null_skip_row_fold(cols, union) -> Column:
+    """Left fold of ``union(acc, x)`` over a row's sketch columns, NULLs
+    skipped (all NULL -> NULL; HLLFunctions.scala:486-499).  One
+    ``aggregate`` references ``acc`` once, so the plan holds one
+    ``union`` for any number of columns; the binary cast lets SQL
+    ``NULL`` literals type-check."""
+    return F.aggregate(
+        F.array(*[_col(c).cast("binary") for c in cols]),
+        F.lit(None).cast("binary"),
+        lambda acc, x: F.when(x.isNull(), acc)
+        .when(acc.isNull(), x)
+        .otherwise(union(acc, x)),
     )
 
 
@@ -135,7 +161,7 @@ def hll_init(col, relative_sd: float | None = None, dtype: T.DataType | None = N
     reference: HyperLogLogInitSimple, HLLFunctions.scala:192-218.
     ``dtype`` is required only for array/map/struct inputs.
     """
-    h = cardinality_hash(_col(col), dtype)
+    h = cardinality_hash(col, dtype)
     return _row_sketch(F.when(h.isNotNull(), F.array(h)), _lg_k(relative_sd))
 
 
@@ -149,8 +175,7 @@ def hll_init_collection(
     reference: HyperLogLogInitCollection, HLLFunctions.scala:294-321,
     offer logic :103-124.
     """
-    hashes = element_hashes(_col(col), dtype)
-    return _row_sketch(hashes, _lg_k(relative_sd))
+    return _row_sketch(element_hashes(col, dtype), _lg_k(relative_sd))
 
 
 # ---------------------------------------------------------------------------
@@ -166,12 +191,8 @@ def hll_init_agg(
 
     reference: HyperLogLogInitSimpleAgg, HLLFunctions.scala:240-273.
     """
-    c = _col(col)
-    lg_k = _lg_k(relative_sd)
-    h = cardinality_hash(c, dtype)
-    return F.when(
-        F.count(h) > 0, F.hll_sketch_agg(h, F.lit(lg_k))
-    ).otherwise(F.lit(None).cast("binary"))
+    h = cardinality_hash(col, dtype)
+    return null_guarded_agg(F.hll_sketch_agg(h, F.lit(_lg_k(relative_sd))), h)
 
 
 def hll_init_collection_agg(
@@ -197,28 +218,18 @@ def hll_merge(col) -> Column:
     reference: HyperLogLogMerge, HLLFunctions.scala:396-439.
     """
     c = _col(col)
-    return F.when(
-        F.count(c) > 0, F.hll_union_agg(c, F.lit(True))
-    ).otherwise(F.lit(None).cast("binary"))
+    return null_guarded_agg(F.hll_union_agg(c, F.lit(True)), c)
 
 
 def hll_row_merge(*cols) -> Column:
     """Variadic scalar union of N sketch columns within one row.
 
-    NULL sketches are skipped; all-NULL -> NULL.
+    NULL sketches are skipped; all-NULL -> NULL (:func:`null_skip_row_fold`).
     reference: HyperLogLogRowMerge, HLLFunctions.scala:458-505.
     """
     if not cols:
         raise ValueError("hll_row_merge requires at least one column")
-    acc = _col(cols[0])
-    for nxt in cols[1:]:
-        n = _col(nxt)
-        acc = (
-            F.when(acc.isNull(), n)
-            .when(n.isNull(), acc)
-            .otherwise(F.hll_union(acc, n, True))
-        )
-    return acc
+    return null_skip_row_fold(cols, lambda acc, x: F.hll_union(acc, x, True))
 
 
 def hll_cardinality(col) -> Column:

@@ -22,9 +22,10 @@ expressions (ObjectHashAggregate for the sketch aggregates):
   statistic until more than ``capacity(k) >= k`` items are retained,
   which the battery exploits for oracle checks.
 
-Null algebra mirrors the reference's HLL contract (HLLFunctions.scala:
-135-142, :158-159): aggregates skip nulls; an empty / all-null group
-yields a NULL sketch, not an empty one.
+Null algebra is the reference's HLL contract, through ``hll.py``'s
+helpers: an empty / all-null group yields a NULL sketch
+(``null_guarded_agg``); a row union skips NULL sketches, all-NULL -> NULL
+(``null_skip_row_fold``).
 """
 
 from __future__ import annotations
@@ -32,7 +33,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .hll import register_functions
+from .hashing import _col
+from .hll import null_guarded_agg, null_skip_row_fold, register_functions
 
 __all__ = [
     "theta_init_agg",
@@ -50,17 +52,6 @@ __all__ = [
 ]
 
 
-def _c(col) -> Column:
-    return F.col(col) if isinstance(col, str) else col
-
-
-def _null_guarded_agg(agg: Column, values: Column) -> Column:
-    """Reference null algebra: empty/all-null group -> NULL sketch
-    (HLLFunctions.scala:158-159); Spark's builtins return an empty
-    sketch instead."""
-    return F.when(F.count(values) > 0, agg)
-
-
 # -- Theta: distinct counting with set algebra ------------------------------
 
 
@@ -70,33 +61,30 @@ def theta_init_agg(col, lg_nom_entries: int | None = None) -> Column:
     Analogue of the reference's ``hll_init_agg``
     (hll/HLLFunctions.scala:240-273) in the theta family; exact while
     the group's distinct count stays below ~2^lg_nom_entries."""
-    c = _c(col)
-    return _null_guarded_agg(F.theta_sketch_agg(c, lg_nom_entries), c)
+    c = _col(col)
+    return null_guarded_agg(F.theta_sketch_agg(c, lg_nom_entries), c)
 
 
 def theta_merge(col, lg_nom_entries: int | None = None) -> Column:
     """Union many theta sketches into one — the reaggregation operator,
     analogue of ``hll_merge`` (hll/HLLFunctions.scala:396-439)."""
-    c = _c(col)
-    return _null_guarded_agg(F.theta_union_agg(c, lg_nom_entries), c)
+    c = _col(col)
+    return null_guarded_agg(F.theta_union_agg(c, lg_nom_entries), c)
 
 
 def theta_cardinality(col) -> Column:
     """Distinct-count estimate of a theta sketch as bigint; NULL in ->
     NULL out (analogue of hll_cardinality, hll/HLLFunctions.scala:
     523-544)."""
-    return F.theta_sketch_estimate(_c(col)).cast("bigint")
+    return F.theta_sketch_estimate(_col(col)).cast("bigint")
 
 
 def theta_union_row(left, right, lg_nom_entries: int | None = None) -> Column:
     """Within-row union of two sketch columns (analogue of
     hll_row_merge, hll/HLLFunctions.scala:458-505), with its null-skip
     algebra: one side NULL -> other side; both NULL -> NULL."""
-    l, r = _c(left), _c(right)
-    return (
-        F.when(l.isNull(), r)
-        .when(r.isNull(), l)
-        .otherwise(F.theta_union(l, r, lg_nom_entries))
+    return null_skip_row_fold(
+        [left, right], lambda acc, x: F.theta_union(acc, x, lg_nom_entries)
     )
 
 
@@ -108,14 +96,14 @@ def theta_intersection_row(left, right) -> Column:
     via intersecting with the non-null side's complement is not
     representable, so one-NULL yields NULL sketch and callers coalesce
     the *estimate* to 0 (matching hll_intersect_cardinality:605-611)."""
-    l, r = _c(left), _c(right)
+    l, r = _col(left), _col(right)
     return F.when(l.isNotNull() & r.isNotNull(), F.theta_intersection(l, r))
 
 
 def theta_difference_row(left, right) -> Column:
     """Within-row sketch difference ``A \\ B`` — no HLL analogue exists
     at all; set-difference estimates are a theta-only capability."""
-    l, r = _c(left), _c(right)
+    l, r = _col(left), _col(right)
     return F.when(l.isNotNull() & r.isNotNull(), F.theta_difference(l, r))
 
 
@@ -128,19 +116,14 @@ def kll_init_agg(col, k: int | None = None) -> Column:
     ``k`` trades size for accuracy (max 65535); while fewer than
     capacity(k) items have been offered the sketch retains every value
     and all quantiles are exact order statistics."""
-    c = _c(col).cast("double")
-    return _null_guarded_agg(F.kll_sketch_agg_double(c, k), c)
+    c = _col(col).cast("double")
+    return null_guarded_agg(F.kll_sketch_agg_double(c, k), c)
 
 
 def kll_row_merge(left, right) -> Column:
     """Merge two KLL sketch columns within a row (scalar, like
     hll_row_merge): null-skip algebra, both NULL -> NULL."""
-    l, r = _c(left), _c(right)
-    return (
-        F.when(l.isNull(), r)
-        .when(r.isNull(), l)
-        .otherwise(F.kll_sketch_merge_double(l, r))
-    )
+    return null_skip_row_fold([left, right], F.kll_sketch_merge_double)
 
 
 def kll_quantile(sketch, rank: float) -> Column:
@@ -150,17 +133,17 @@ def kll_quantile(sketch, rank: float) -> Column:
     before the inclusive ceil (DataSketches tail rounding), so float
     dust just above an integer rank snaps back down — measured in
     ``test_kll_quantile_is_exact_order_statistic``."""
-    return F.kll_sketch_get_quantile_double(_c(sketch), F.lit(float(rank)))
+    return F.kll_sketch_get_quantile_double(_col(sketch), F.lit(float(rank)))
 
 
 def kll_rank(sketch, value: float) -> Column:
     """Normalized rank of ``value`` in the sketched distribution."""
-    return F.kll_sketch_get_rank_double(_c(sketch), F.lit(float(value)))
+    return F.kll_sketch_get_rank_double(_col(sketch), F.lit(float(value)))
 
 
 def kll_count(sketch) -> Column:
     """Total weight (row count) the sketch has absorbed."""
-    return F.kll_sketch_get_n_double(_c(sketch)).cast("bigint")
+    return F.kll_sketch_get_n_double(_col(sketch)).cast("bigint")
 
 
 def kll_weighted_quantiles(
@@ -200,10 +183,10 @@ def kll_weighted_quantiles(
     # plain cast of an out-of-int32 weight would throw CAST_OVERFLOW at
     # runtime (and silently wrap with ANSI off) instead of dropping the
     # row as the contract above promises.
-    w = _c(weight_col).try_cast("int")
+    w = _col(weight_col).try_cast("int")
     expanded = df.select(
         *group_cols,
-        F.explode(F.array_repeat(_c(value_col).cast("double"), w)).alias("__v"),
+        F.explode(F.array_repeat(_col(value_col).cast("double"), w)).alias("__v"),
     )
     sk = expanded.groupBy(*group_cols).agg(kll_init_agg("__v", k).alias("__sk"))
     cols = [

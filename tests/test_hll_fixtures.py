@@ -134,6 +134,35 @@ def test_f3_row_merge_null_algebra(spark):
     assert [r["n"] for r in out] == [1, 3, 2, 1, None]
 
 
+def test_f3_row_merge_matches_pairwise_fold(spark):
+    """hll_row_merge of N = 1..5 columns (lgK 9/10/11 mixed), with a NULL
+    at each position in turn, writes the bytes of the pairwise left fold
+    of hll_union over the row's non-NULL sketches; all NULL -> NULL."""
+    lg_ks = [9, 10, 11, 10, 9]
+    sketches = spark.range(600).agg(
+        *[
+            F.hll_sketch_agg(F.when(F.col("id") % 5 != i, F.col("id") * (i + 1)), lg)
+            .alias(f"s{i}")
+            for i, lg in enumerate(lg_ks)
+        ]
+    ).select("*", F.lit(None).cast("binary").alias("null"))
+    merged, expected = [], []
+    for n in range(1, 6):
+        for null_at in [None, *range(n)]:
+            names = ["null" if i == null_at else f"s{i}" for i in range(n)]
+            present = [F.col(c) for c in names if c != "null"]
+            fold = present[0] if present else F.lit(None).cast("binary")
+            for c in present[1:]:
+                fold = F.hll_union(fold, c, True)
+            merged.append(AF.hll_row_merge(*names).alias(f"m{len(merged)}"))
+            expected.append(fold.alias(f"e{len(expected)}"))
+    row = sketches.select(*merged, *expected).head()
+    got = [row[f"m{i}"] for i in range(len(merged))]
+    want = [row[f"e{i}"] for i in range(len(expected))]
+    assert got == want
+    assert got[1] is None and got[0] is not None  # N=1: NULL at 0, none
+
+
 def test_f3_intersection(spark):
     """HLLFunctionsTest.scala:296-338 — (5, 0) and null algebra (0, null)."""
     rows = [
@@ -205,6 +234,49 @@ def test_f4_literal_edge_cases(spark):
     assert row["c_empty_arr"] == 0
     assert row["c_empty_map"] == 0
     assert row["c_arr"] == 3
+
+
+F5_NESTED = [
+    # (type, values distinct only to a type-aware hash, distinct count)
+    (ARR_STR, [[], [None], [None, None]], 3),
+    (
+        T.StructType([T.StructField(f, T.IntegerType()) for f in ("foo", "bar")]),
+        [(None, 1), (1, None)],
+        2,
+    ),
+]
+
+
+@pytest.mark.parametrize("dtype, values, distinct", F5_NESTED, ids=["array", "struct"])
+def test_f5_nested_input_needs_dtype(spark, dtype, values, distinct):
+    """FIXTURES.md F5: nested values that plain xxhash64 collides (it
+    skips null elements and fields) sketch distinctly with ``dtype``;
+    without it the hash raises an error naming ``dtype`` instead of
+    silently reading fewer distinct values."""
+    df = spark.createDataFrame([(v,) for v in values], T.StructType([T.StructField("v", dtype)]))
+    typed = df.agg(AF.hll_cardinality(AF.hll_init_agg("v", dtype=dtype)).alias("n"))
+    assert typed.head()["n"] == distinct
+    for untyped in (
+        df.agg(AF.hll_init_agg("v").alias("sk")),
+        df.select(AF.cardinality_hash("v").alias("h")),
+    ):
+        with pytest.raises(Exception, match="dtype"):
+            untyped.collect()
+
+
+def test_primitive_hash_plans_no_nested_check(spark):
+    """The nested-input check folds away at plan time on primitive
+    inputs (``typeof`` is foldable): no raise_error reaches the
+    optimized plan, so primitives pay nothing per row."""
+    s = F.col("id").cast("string")
+    df = spark.range(3).select(F.col("id"), s.alias("s"), s.cast("binary").alias("b"))
+    hashed = df.select(
+        *[AF.cardinality_hash(c).alias(f"h_{c}") for c in df.columns],
+        AF.element_hashes(F.array("s")).alias("e"),
+    )
+    optimized = hashed._jdf.queryExecution().optimizedPlan().toString()
+    assert "raise_error" not in optimized
+    assert "xxhash64" in optimized
 
 
 def test_error_bound_validation():

@@ -206,11 +206,30 @@ def test_row_merge_is_variadic_and_skips_nulls(registered):
         SELECT hll_cardinality(hll_row_merge(a, b, c)) AS abc,
                hll_cardinality(hll_row_merge(a, NULL, c)) AS a_c,
                hll_cardinality(hll_row_merge(NULL, b, NULL)) AS b,
-               hll_row_merge(CAST(NULL AS BINARY), NULL, NULL) AS none
+               hll_row_merge(CAST(NULL AS BINARY), NULL, NULL) AS none,
+               hll_row_merge(NULL, NULL) AS nulls
         FROM s
         """
     ).collect()[0]
-    assert tuple(rows) == (3, 2, 1, None)
+    assert tuple(rows) == (3, 2, 1, None, None)
+
+
+def test_row_merge_plans_one_union_per_row(registered):
+    """A 6-column hll_row_merge, DataFrame and variadic SQL, plans at most
+    N - 1 hll_union calls: the row fold references its accumulator once,
+    where a when() chain repeating it grows 3^N."""
+    spark = registered
+    names = [f"c{i}" for i in range(6)]
+    df = spark.range(3).select(
+        *[hll.hll_init(F.col("id") + i).alias(c) for i, c in enumerate(names)]
+    )
+    df.createOrReplaceTempView("t_rm6")
+    sql = spark.sql(f"SELECT hll_row_merge({', '.join(names)}) AS sk FROM t_rm6")
+    dataframe = df.select(hll.hll_row_merge(*names).alias("sk"))
+    for merged in (sql, dataframe):
+        analyzed = merged._jdf.queryExecution().analyzed().toString()
+        assert 1 <= analyzed.count("hll_union(") <= len(names) - 1
+    assert sql.collect() == dataframe.collect()
 
 
 def test_session_relative_sd_resolves_at_analysis(registered):
