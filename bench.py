@@ -103,7 +103,7 @@ def main():
         wpairs = ngram_jaccard_pairs(
             docs64, "doc_id", "text", n=3, threshold_num=6, threshold_den=10
         )
-        connected_components(wpairs, "id_a", "id_b", max_iter=2).write.format(
+        connected_components(wpairs, "id_a", "id_b").write.format(
             "noop"
         ).mode("overwrite").save()
 

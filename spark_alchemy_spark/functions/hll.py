@@ -54,6 +54,7 @@ import functools
 
 import pyarrow as pa  # module-level: arrow_udf type hints resolve here
 from py4j.java_gateway import JavaClass
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -385,6 +386,18 @@ class _SqlBuilder:
         self.spark, self.name, self.spec = spark, name, spec
 
     def apply(self, args):
+        """The Column's expression; any error is re-raised as a JVM
+        ``IllegalArgumentException`` whose message starts with the SQL
+        name (``register_functions`` has py4j throw it on the analyzer's
+        side, so the caller sees it, not a py4j wrapper)."""
+        try:
+            return self._build(args)
+        except Exception as e:
+            msg = e.java_exception.getMessage() if isinstance(e, Py4JJavaError) else e
+            error = self.spark._jvm.java.lang.IllegalArgumentException(f"{self.name}: {msg}")
+            raise Py4JJavaError("", error) from e
+
+    def _build(self, args):
         fn, n_cols, n_lits, init = self.spec
         exprs = [args.apply(i) for i in range(args.length())]
         n_cols = len(exprs) if n_cols is None else n_cols
@@ -409,9 +422,7 @@ class _SqlBuilder:
         anything else (strings, decimals) as its string form."""
         value = e.eval(None) if e.foldable() else None
         if value is None:
-            raise ValueError(
-                f"{self.name}: argument {e.sql()} must be a non-NULL literal"
-            )
+            raise ValueError(f"argument {e.sql()} must be a non-NULL literal")
         return value if isinstance(value, (int, float)) else str(value)
 
     class Java:
@@ -423,20 +434,26 @@ def register_functions(spark, table: dict) -> None:
     :data:`_SQL_FUNCTIONS`) as a temporary function of ``spark``.  The
     builders run in this Python process through the py4j callback
     server, which classic Spark provides (``foreachBatch`` uses the
-    same)."""
+    same), set to throw a builder's Java exception as it is.  Under
+    pyspark's pinned-thread ``ClientServer`` the callback parameters
+    are its ``python_parameters``."""
     from pyspark.java_gateway import ensure_callback_server_started
 
-    ensure_callback_server_started(spark.sparkContext._gateway)
+    gateway = spark.sparkContext._gateway
+    ensure_callback_server_started(gateway)
+    gateway.callback_server_parameters.propagate_java_exceptions = True
     registry = spark._jsparkSession.sessionState().functionRegistry()
     for name, spec in table.items():
         registry.createOrReplaceTempFunction(name, _SqlBuilder(spark, name, spec), "scala_udf")
 
 
 def register(spark) -> None:
-    """Register the nine reference SQL names, plus ``agkn_cardinality``,
-    as temporary functions of ``spark``, the way the reference's
-    ``NativeFunctionRegistration`` does (NativeFunctionRegistration.scala:13-85,
-    name list HLLFunctionRegistration.scala:8-18).
+    """Register this engine's SQL names as temporary functions of
+    ``spark``: the nine reference names plus ``agkn_cardinality``, the
+    way the reference's ``NativeFunctionRegistration`` does
+    (NativeFunctionRegistration.scala:13-85, name list
+    HLLFunctionRegistration.scala:8-18), and the seven theta/KLL names
+    of ``sketches._SQL_FUNCTIONS`` — seventeen names, one call.
 
     Each name is a py4j :class:`_SqlBuilder` in the session's function
     registry: the analyzer hands it the resolved arguments and gets back
@@ -448,6 +465,10 @@ def register(spark) -> None:
     (``hll_init_agg(x, 0.01)``, validated at analysis), a variadic
     ``hll_row_merge`` and literal ``hll_convert`` format names.  An
     un-aliased call's output column is named after that expression, not
-    the SQL name.
+    the SQL name.  A call the builder rejects (wrong argument count, a
+    non-literal where a literal belongs, an unknown format) fails at
+    analysis with an ``IllegalArgumentException`` naming the function.
     """
-    register_functions(spark, _SQL_FUNCTIONS)
+    from .sketches import _SQL_FUNCTIONS as sketch_functions  # imports hll
+
+    register_functions(spark, {**_SQL_FUNCTIONS, **sketch_functions})

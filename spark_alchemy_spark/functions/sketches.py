@@ -34,7 +34,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from .hashing import _col
-from .hll import null_guarded_agg, null_skip_row_fold, register_functions
+from .hll import null_guarded_agg, null_skip_row_fold
 
 __all__ = [
     "theta_init_agg",
@@ -197,7 +197,10 @@ def kll_weighted_quantiles(
 
 
 #: SQL name -> DataFrame twin, in ``hll._SQL_FUNCTIONS``'s layout:
-#: (function, column arguments, optional literal arguments, init form).
+#: (function, column arguments, optional literal arguments, init form);
+#: ``hll.register`` installs these with the ``hll_*`` names.  The
+#: aggregate forms already have Spark SQL names (``theta_sketch_agg``,
+#: ``theta_union_agg``, ``kll_sketch_agg_double`` ...).
 #: ``theta_union_row`` takes an optional literal lgNomEntries and
 #: ``kll_quantile`` a literal rank.
 _SQL_FUNCTIONS = {
@@ -209,15 +212,3 @@ _SQL_FUNCTIONS = {
     "kll_quantile": (kll_quantile, 1, 1, False),
     "kll_count": (kll_count, 1, 0, False),
 }
-
-
-def register_sql(spark) -> None:
-    """Register the theta/KLL scalar surface under this engine's SQL
-    names (the sketch-family extension of the reference's registry
-    pattern, NativeFunctionRegistration.scala:20-26).  Each name resolves,
-    at analysis time, to the expression its DataFrame twin above builds
-    (``hll.register_functions``), so SQL gets the same null algebra.
-    The aggregate forms already have Spark SQL names
-    (``theta_sketch_agg``, ``theta_union_agg``, ``kll_sketch_agg_double``
-    ...)."""
-    register_functions(spark, _SQL_FUNCTIONS)

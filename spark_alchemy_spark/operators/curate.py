@@ -11,27 +11,23 @@ filters first (quality, language — codegen, no shuffle), then the
 shuffle-bearing dedups over the already-reduced survivor set, then
 bookkeeping aggregates.
 
-The near-dedup stage resolves candidate pairs to survivors via
-distributed min-label connected components (operators/graph.py) — one
-shuffle per propagation round, documents never leave executors.  When
-the counted pair volume is tiny (<= ``driver_pair_limit``) a
-driver-side min-id union–find shortcut avoids the iterative rounds;
-the guard is an actual count, never an assumption, so adversarial
-corpora (low thresholds, dirty data) stay executor-side instead of
-OOMing the driver.
+The near-dedup stage resolves candidate pairs to survivors through
+``dedup.pairs_to_comp_map``, the one component machine every dedup
+family shares: it counts the pairs, closes a small list by union-find
+on the driver and a large one by distributed min-label connected
+components (operators/graph.py), so adversarial corpora (low
+thresholds, dirty data) stay executor-side instead of OOMing the
+driver.  Every document that is not its component's minimum is
+dropped.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from ..localframe import local_frame
 
 from ..functions.text import doc_fingerprint, lang_id, quality_flags, token_count
-from .dedup import minhash_lsh_pairs
-from .graph import connected_components
+from .dedup import minhash_lsh_pairs, pairs_to_comp_map
 
 
 def curate_corpus(
@@ -44,7 +40,6 @@ def curate_corpus(
     near_dup_threshold: float | None = 0.5,
     num_perm: int = 64,
     bands: int = 16,
-    driver_pair_limit: int = 50_000,
 ) -> DataFrame:
     """Curated survivor set with per-document bookkeeping columns
     (``lang_pred``, ``n_tokens``).  Deterministic: smallest id survives
@@ -75,9 +70,7 @@ def curate_corpus(
         exact, id_col, text_col,
         threshold=near_dup_threshold, num_perm=num_perm, bands=bands,
     )
-    return apply_near_dedup(
-        exact, pairs, id_col, driver_pair_limit=driver_pair_limit
-    )
+    return apply_near_dedup(exact, pairs, id_col)
 
 
 def near_dup_pairs(
@@ -109,55 +102,19 @@ def apply_near_dedup(
     exact: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
-    driver_pair_limit: int = 50_000,
 ) -> DataFrame:
-    """Stage 3: resolve near-dup pairs to survivors.  COUNTS the pair
-    list first — the driver union-find shortcut is gated on measured
-    volume, not hope; above the limit, distributed connected components
-    resolve losers executor-side (nothing unbounded reaches the
-    driver)."""
-    n_pairs = pairs.count()
-    if n_pairs == 0:
-        return exact
-
-    id_type = exact.schema[id_col].dataType
-    if n_pairs <= driver_pair_limit:
-        losers = _pair_losers(pairs)
-        loser_df = local_frame(exact.sparkSession, 
-            [(i,) for i in sorted(losers)],
-            T.StructType([T.StructField(id_col, id_type)]),
-        )
-        return exact.join(F.broadcast(loser_df), on=id_col, how="left_anti")
-
-    # Executor-side path: distributed connected components over the pair
-    # graph; every node that is not its component's minimum loses.  The
-    # documents side anti-joins against the (pair-bounded) loser set.
-    comp = connected_components(pairs, "id_a", "id_b")
-    losers_df = comp.filter(F.col("node") != F.col("comp")).select(
-        F.col("node").alias(id_col)
+    """Stage 3: resolve near-dup pairs to survivors.  Anti-joins
+    ``exact`` against the non-minimum nodes of
+    ``dedup.pairs_to_comp_map(pairs)`` — the counted driver /
+    distributed guard lives there, once — so the smallest id of every
+    near-dup component survives.  With no pairs the loser set is empty
+    and ``exact``'s rows come back unchanged."""
+    losers = (
+        pairs_to_comp_map(pairs)
+        .filter(F.col("node") != F.col("comp"))
+        .select(F.col("node").alias(id_col))
     )
-    return exact.join(losers_df, on=id_col, how="left_anti")
-
-
-def _pair_losers(pairs: DataFrame) -> set:
-    """Min-id union–find over a SMALL (pre-counted) near-dup pair list:
-    every doc that is not its component's minimum is a loser.  Only
-    called under ``driver_pair_limit`` — the unbounded path is
-    ``operators.graph.connected_components``."""
-    parent: dict = {}
-
-    def find(x):
-        while parent.setdefault(x, x) != x:
-            parent[x] = parent[parent[x]]  # path halving
-            x = parent[x]
-        return x
-
-    for row in pairs.collect():
-        ra, rb = find(row["id_a"]), find(row["id_b"])
-        if ra != rb:  # min root wins
-            lo, hi = (ra, rb) if ra < rb else (rb, ra)
-            parent[hi] = lo
-    return {x for x in parent if find(x) != x}
+    return exact.join(losers, on=id_col, how="left_anti")
 
 
 def curation_report(

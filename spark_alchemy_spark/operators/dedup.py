@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from ..localframe import local_frame
 
 from ..functions.text import exploded_shingles, shingles_from_tokens, tokens
+from .graph import connected_components
 
 
 # ---------------------------------------------------------------------------
@@ -323,29 +324,18 @@ def incremental_dedup(
 
 def minhash_signature(shingle_col: Column, num_perm: int = 64) -> Column:
     """MinHash signature: per permutation i, min over shingles of
-    ``xxhash64(i, base)`` where ``base = xxhash64(shingle)`` is computed
-    ONCE per shingle.  Permutations then re-hash 8-byte longs instead of
-    re-scanning the shingle strings (string hashing dominates at 64
-    permutations x ~50 shingles/doc — one string pass total makes the
-    signature ~num_perm x cheaper on wide documents).  Empty shingle
-    set -> NULL signature."""
-    return _minhash_from_hashes(
-        F.transform(shingle_col, lambda s: F.xxhash64(s)), num_perm
-    )
-
-
-def _minhash_from_hashes(hash_col, num_perm: int) -> Column:
-    """Signature from pre-hashed shingles (array<long>).  NB callers on
-    a hot path should materialize ``hash_col`` as a real column first —
-    handed a raw expression, Catalyst inlines it into all ``num_perm``
-    mins and the one-pass saving is lost (minhash_lsh_pairs does this)."""
+    ``xxhash64(i, xxhash64(shingle))`` — the signature
+    :func:`minhash_lsh_pairs` computes as one generated SQL aggregate
+    over its distinct (doc, shingle hash) rows.  Empty shingle set ->
+    NULL signature."""
+    hashes = F.transform(shingle_col, lambda s: F.xxhash64(s))
+    # one-parameter lambda: transform binds a second parameter to the
+    # element INDEX, which would hash every permutation alike
     mins = [
-        F.array_min(
-            F.transform(hash_col, lambda x, i=i: F.xxhash64(F.lit(i), x))
-        )
+        F.array_min(F.transform(hashes, lambda x: F.xxhash64(F.lit(i), x)))
         for i in range(num_perm)
     ]
-    return F.when(F.size(hash_col) > 0, F.array(*mins))
+    return F.when(F.size(hashes) > 0, F.array(*mins))
 
 
 def minhash_lsh_pairs(
@@ -1539,51 +1529,54 @@ def semantic_dup_pairs(
     )
 
 
-def pairs_to_comp_map(
-    pairs: DataFrame, driver_pair_limit: int = 50_000
-) -> DataFrame:
+#: Pair lists of at most this many pairs close on the driver; longer
+#: ones run the distributed propagation.  A dup pair list is
+#: pair-bounded, typically thousands of edges even on a huge corpus.
+DRIVER_PAIR_LIMIT = 50_000
+
+
+def pairs_to_comp_map(pairs: DataFrame) -> DataFrame:
     """Close a duplicate-pair graph (id_a, id_b) into its connected
     components; returns the (node, comp) label map, ``comp`` = the
     component's minimum node id (the canonical survivor).  Only nodes
     appearing in at least one pair are labeled.
 
-    Follows the counted-guard discipline of
-    ``curate.apply_near_dedup``: the pair list is COUNTED first, and
-    only a measured-small list (<= ``driver_pair_limit``) is collapsed
-    by driver union–find (a dup pair list is pair-bounded, typically
-    thousands of edges even on a huge corpus); above the limit the
-    distributed min-label propagation
-    (``graph.connected_components``) runs instead — nothing unbounded
-    ever reaches the driver.  Shared by the semantic, text, and image
-    (aHash) dedup families — ONE component machine across modalities."""
-    from .graph import connected_components
-
+    The one component machine of every dedup family (curation, the
+    semantic, text and image dedups): the pair list is COUNTED once,
+    and a measured-small list (<= :data:`DRIVER_PAIR_LIMIT`) is closed
+    by :func:`_min_id_components` on the driver; above the limit
+    ``graph.connected_components`` propagates min labels to
+    convergence executor-side, so nothing unbounded reaches the
+    driver.  Both paths give the same map, including on long chains.
+    The node type is inherited from the pair schema."""
     pairs = pairs.localCheckpoint(eager=False)
-    n_pairs = pairs.count()
-    if 0 < n_pairs <= driver_pair_limit:
-        parent: dict = {}
+    if pairs.count() > DRIVER_PAIR_LIMIT:
+        return connected_components(pairs, "id_a", "id_b")
+    node_t = pairs.schema["id_a"].dataType.simpleString()
+    return local_frame(
+        pairs.sparkSession,
+        list(_min_id_components(pairs.select("id_a", "id_b").collect()).items()),
+        f"node {node_t}, comp {node_t}",
+    )
 
-        def find(x):
-            while parent.setdefault(x, x) != x:
-                parent[x] = parent[parent[x]]  # path halving
-                x = parent[x]
-            return x
 
-        for row in pairs.select("id_a", "id_b").collect():
-            ra, rb = find(row["id_a"]), find(row["id_b"])
-            if ra != rb:  # min root wins
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-        # node type INHERITED from the caller's pair schema (string
-        # ids must not crash at driver collapse, and the driver path
-        # must agree with the distributed fallback — same pattern as
-        # the cross-set cosine kernels; round-7 ADVICE finding)
-        node_t = pairs.schema["id_a"].dataType.simpleString()
-        return local_frame(pairs.sparkSession, 
-            [(x, find(x)) for x in parent],
-            f"node {node_t}, comp {node_t}",
-        )
-    return connected_components(pairs, "id_a", "id_b")
+def _min_id_components(edges) -> dict:
+    """{node: its component's minimum node} over (a, b) pairs — min-id
+    union-find with path halving."""
+    parent: dict = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]  # path halving
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:  # min root wins
+            lo, hi = (ra, rb) if ra < rb else (rb, ra)
+            parent[hi] = lo
+    return {x: find(x) for x in parent}
 
 
 def component_report(comps: DataFrame) -> DataFrame:
@@ -1602,18 +1595,16 @@ def semantic_dedup_components(
     id_col: str,
     vec_col: str,
     threshold: float,
-    driver_pair_limit: int = 50_000,
     **pair_kwargs,
 ) -> DataFrame:
     """Cluster-then-prune semantic dedup, collapsed transitively: the
     ``semantic_dup_pairs`` graph closed into connected components
-    (:func:`pairs_to_comp_map` — counted driver guard with distributed
-    fallback), keeping each component's minimum id as the canonical
-    survivor.  Returns one row per duplicate component: (comp,
-    n_members, min_id, max_id, n_dropped) — singletons (vectors in no
-    pair) are implicitly kept and not reported."""
+    (:func:`pairs_to_comp_map`), keeping each component's minimum id as
+    the canonical survivor.  Returns one row per duplicate component:
+    (comp, n_members, min_id, max_id, n_dropped) — singletons (vectors
+    in no pair) are implicitly kept and not reported."""
     pairs = semantic_dup_pairs(df, id_col, vec_col, threshold, **pair_kwargs)
-    return component_report(pairs_to_comp_map(pairs, driver_pair_limit))
+    return component_report(pairs_to_comp_map(pairs))
 
 
 def doc_hash_embeddings(

@@ -9,13 +9,15 @@ That closure is connected components over the pair graph.
 Scale design: min-label propagation as a DataFrame loop —
 each round joins the current labels across (symmetrized) edges and
 keeps the per-node minimum, so one round is one shuffle on the node
-key; rounds needed = graph diameter (small for dup clusters, which are
-near-cliques).  Convergence is detected by counting changed labels
-(a single aggregate scalar per round — no driver-side row iteration;
-label-type agnostic, so string node ids converge correctly too), and
-``localCheckpoint`` cuts the growing lineage every round, which is
-what keeps plan size and task deserialization flat when the loop runs
-long (the classic iterative-algorithm failure mode on Spark).
+key.  Labels only ever fall, so the loop runs until a round changes
+none: diameter + 1 rounds at most (few for dup clusters, which are
+near-cliques; a chain of n nodes takes n).  Convergence is detected by
+counting changed labels (a single aggregate scalar per round — no
+driver-side row iteration; label-type agnostic, so string node ids
+converge correctly too), and ``localCheckpoint`` cuts the growing
+lineage every round, which is what keeps plan size and task
+deserialization flat when the loop runs long (the classic
+iterative-algorithm failure mode on Spark).
 """
 
 from __future__ import annotations
@@ -28,14 +30,15 @@ def connected_components(
     edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
-    max_iter: int = 25,
 ) -> DataFrame:
     """(node, component) for every node in ``edges``; the component id
     is the minimum node id reachable from the node.
 
-    Min-label propagation to fixpoint (bounded by ``max_iter``);
-    isolated nodes never appear in ``edges`` and so are their own
-    implicit singleton components — callers union them in if needed.
+    Min-label propagation to convergence (the loop ends on the first
+    round that changes no label, never on a round cap, so the labels
+    are always final); isolated nodes never appear in ``edges`` and so
+    are their own implicit singleton components — callers union them
+    in if needed.
     """
     sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     sym = sym.union(sym.select(F.col("b").alias("a"), F.col("a").alias("b")))
@@ -47,7 +50,7 @@ def connected_components(
         .withColumn("comp", F.col("node"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_iter):
+    while True:
         neigh_min = (
             sym.join(labels, sym.b == labels.node)
             .groupBy("a")
@@ -71,8 +74,7 @@ def connected_components(
         changed = updated.filter(F.col("comp") != F.col("old_comp")).count()
         labels = updated.drop("old_comp")
         if changed == 0:
-            break
-    return labels
+            return labels
 
 
 def pagerank(

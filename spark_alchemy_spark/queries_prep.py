@@ -749,13 +749,13 @@ def decile_customer_revenue(spark, sf_dir):
 )
 def sketch_sql_surface(spark, sf_dir):
     """The theta/KLL families driven ENTIRELY from SQL text through the
-    registered names (register_sql) — sketches built by the built-in
+    registered names (``hll.register``) — sketches built by the built-in
     SQL aggregates, read through this engine's SQL names; exact below
     capacity so the oracle is plain COUNT(DISTINCT) / quantile_disc."""
-    from .functions.sketches import register_sql
+    from .functions.hll import register
 
     (lineitem,) = _t(spark, sf_dir, "lineitem")
-    register_sql(spark)
+    register(spark)
     lineitem.createOrReplaceTempView("lineitem_sk")
     return spark.sql(
         """

@@ -2,7 +2,9 @@
 
 from __future__ import annotations
 
-from spark_alchemy_spark.operators.curate import _pair_losers, curate_corpus
+import spark_alchemy_spark.operators.dedup as dedup_mod
+from spark_alchemy_spark.operators.curate import curate_corpus
+from spark_alchemy_spark.operators.dedup import pairs_to_comp_map
 
 GOOD = "the quick brown fox jumps over the lazy dog and then runs far away to the old barn again tonight with joy"  # 21 tokens, en
 
@@ -43,16 +45,19 @@ def test_near_dedup_drops_component_non_minima(spark):
 
 
 def test_pair_losers_union_find(spark):
+    """The driver union-find of pairs_to_comp_map: every node that is
+    not its component's minimum is a loser."""
     pairs = spark.createDataFrame(
         [(1, 2), (2, 5), (7, 9), (3, 4)], "id_a long, id_b long"
     )
-    assert _pair_losers(pairs) == {2, 5, 9, 4}
+    comp = pairs_to_comp_map(pairs).collect()
+    assert {r["node"] for r in comp if r["node"] != r["comp"]} == {2, 5, 9, 4}
 
 
 def test_near_dedup_distributed_path_matches_driver_path(spark, monkeypatch):
-    """With driver_pair_limit=0 the loser set must come from distributed
-    connected_components — _pair_losers must never run — and the
-    survivor set must equal the driver-shortcut result."""
+    """With DRIVER_PAIR_LIMIT = 0 the loser set must come from distributed
+    connected_components — the driver union-find must never run — and
+    the survivor set must equal the driver-shortcut result."""
     base = GOOD + " alpha beta gamma delta epsilon zeta eta theta iota kappa"
     variant = base.replace("joy", "glee")
     variant2 = base.replace("barn", "shed")  # chains: 1~2, 1~3
@@ -63,17 +68,14 @@ def test_near_dedup_distributed_path_matches_driver_path(spark, monkeypatch):
         for r in curate_corpus(docs, near_dup_threshold=0.5).collect()
     )
 
-    import spark_alchemy_spark.operators.curate as curate_mod
-
     def _boom(_):
         raise AssertionError("driver-side union-find ran on the distributed path")
 
-    monkeypatch.setattr(curate_mod, "_pair_losers", _boom)
+    monkeypatch.setattr(dedup_mod, "DRIVER_PAIR_LIMIT", 0)
+    monkeypatch.setattr(dedup_mod, "_min_id_components", _boom)
     got = sorted(
         r["doc_id"]
-        for r in curate_corpus(
-            docs, near_dup_threshold=0.5, driver_pair_limit=0
-        ).collect()
+        for r in curate_corpus(docs, near_dup_threshold=0.5).collect()
     )
     assert got == expected and 1 in got
 

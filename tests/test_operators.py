@@ -286,6 +286,27 @@ def test_connected_components_chain_and_islands(spark):
     assert {comp[n] for n in (20, 21)} == {20}
 
 
+def test_chain_is_one_component_on_every_path(spark, monkeypatch):
+    """A 41-node chain (diameter 40) is ONE component from the
+    distributed propagation and from pairs_to_comp_map with its guard
+    forced either way: the loop runs to convergence, not to a round
+    cap, so the answer cannot depend on the pair count."""
+    import spark_alchemy_spark.operators.dedup as dedup_mod
+    from spark_alchemy_spark.operators.dedup import pairs_to_comp_map
+    from spark_alchemy_spark.operators.graph import connected_components
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(40)], "id_a long, id_b long"
+    )
+    chain = {i: 0 for i in range(41)}
+    got = {r["node"]: r["comp"] for r in connected_components(edges).collect()}
+    assert got == chain
+    for limit in (50_000, 0):  # driver union-find, then distributed
+        monkeypatch.setattr(dedup_mod, "DRIVER_PAIR_LIMIT", limit)
+        m = {r["node"]: r["comp"] for r in pairs_to_comp_map(edges).collect()}
+        assert m == chain
+
+
 def test_as_of_join_forward(spark):
     from pyspark.sql import functions as F
 

@@ -213,7 +213,7 @@ def test_connected_components_equals_union_find(spark, edges):
     independent implementations of the same closure; on arbitrary
     graphs (self-loops, cycles, duplicate edges, empty) both must
     assign every node the same min-id component."""
-    from spark_alchemy_spark.operators.curate import _pair_losers
+    from spark_alchemy_spark.operators.dedup import pairs_to_comp_map
     from spark_alchemy_spark.operators.graph import connected_components
 
     edges = [(a, b) for a, b in edges if a != b]
@@ -241,8 +241,11 @@ def test_connected_components_equals_union_find(spark, edges):
     nodes = {n for e in edges for n in e}
     expected = {n: find(n) for n in nodes}
     assert cc == expected
-    # and the curate driver-shortcut derives exactly the non-min losers
-    losers = _pair_losers(df)
+    # and the driver union-find behind pairs_to_comp_map (a 25-pair list
+    # is under its guard) gives the same map, so the same non-min losers
+    driver = {r["node"]: r["comp"] for r in pairs_to_comp_map(df).collect()}
+    assert driver == expected
+    losers = {n for n, c in driver.items() if n != c}
     assert losers == {n for n, c in expected.items() if n != c}
 
 
@@ -297,6 +300,45 @@ def test_minhash_estimate_tracks_exact_jaccard(spark, docs):
             exact = len(sa & sb) / len(sa | sb)
             est = sum(x == y for x, y in zip(sigs[a], sigs[b])) / 64.0
             assert abs(est - exact) <= 0.25, (exact, est)
+
+
+def test_lsh_pair_estimate_is_minhash_signature_agreement(spark):
+    """minhash_lsh_pairs builds its signatures as one generated SQL
+    string; for every pair it returns, ``est_jaccard`` must be exactly
+    the share of equal positions in ``minhash_signature`` over the two
+    documents' distinct shingles, so the property above covers it."""
+    from spark_alchemy_spark.functions.text import exploded_shingles
+    from spark_alchemy_spark.operators.dedup import (
+        minhash_lsh_pairs,
+        minhash_signature,
+    )
+
+    base = [f"w{t}" for t in range(30)]
+    texts = [
+        " ".join(base),
+        " ".join(base[:25] + ["x1", "x2", "x3", "x4", "x5"]),
+        " ".join(base[5:] + ["y1", "y2"]),
+        " ".join(base[::-1]),
+        " ".join(f"z{t}" for t in range(20)),
+        " ".join(base[:12] + [f"z{t}" for t in range(12)]),
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "id long, text string")
+    pairs = minhash_lsh_pairs(df, "id", "text", threshold=0.2).collect()
+    assert len(pairs) >= 3
+    sigs = {
+        r["id"]: r["sig"]
+        for r in exploded_shingles(df, "id", "text", 3)
+        .groupBy("id")
+        .agg(minhash_signature(F.collect_set("__s"), num_perm=64).alias("sig"))
+        .collect()
+    }
+    for r in pairs:
+        agree = sum(
+            x == y for x, y in zip(sigs[r["id_a"]], sigs[r["id_b"]])
+        )
+        # est_jaccard = round(agree / 64, 4): k/64 has at most six
+        # decimals, so the rounded value still names k uniquely
+        assert round(r["est_jaccard"] * 64) == agree, (r, agree)
 
 
 # ---------------------------------------------------------------------------

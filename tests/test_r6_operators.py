@@ -196,21 +196,24 @@ def test_bitstring_hamming_pairs_rejects_wrong_width(spark):
         bitstring_hamming_pairs(df, "rep", "ahash").collect()
 
 
-def test_pairs_to_comp_map_inherits_string_ids(spark):
-    """The driver union–find path must inherit the caller's id type —
-    string ids crash a hardcoded 'node long' schema and diverge from
-    the distributed fallback (round-7 ADVICE finding)."""
+def test_pairs_to_comp_map_inherits_string_ids(spark, monkeypatch):
+    """Both paths must inherit the caller's id type — string ids crash
+    a hardcoded 'node long' schema on the driver union–find path and
+    diverge from the distributed fallback (round-7 ADVICE finding)."""
+    import spark_alchemy_spark.operators.dedup as dedup_mod
     from spark_alchemy_spark.operators.dedup import pairs_to_comp_map
 
     pairs = spark.createDataFrame(
         [("b", "c"), ("a", "b"), ("x", "y")], "id_a string, id_b string"
     )
-    m = {r["node"]: r["comp"] for r in pairs_to_comp_map(pairs).collect()}
-    assert m == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
-    assert dict(pairs_to_comp_map(pairs).dtypes) == {
-        "node": "string",
-        "comp": "string",
-    }
+    for limit in (50_000, 0):  # driver union-find, then distributed
+        monkeypatch.setattr(dedup_mod, "DRIVER_PAIR_LIMIT", limit)
+        m = {r["node"]: r["comp"] for r in pairs_to_comp_map(pairs).collect()}
+        assert m == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
+        assert dict(pairs_to_comp_map(pairs).dtypes) == {
+            "node": "string",
+            "comp": "string",
+        }
 
 
 def test_selective_recall_entry_laws(spark):

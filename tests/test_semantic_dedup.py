@@ -250,9 +250,12 @@ def test_doc_hash_embeddings_match_python_replay(spark):
     assert all(len(v) == 8 for v in got.values())
 
 
-def test_semantic_components_driver_guard_matches_distributed(spark):
+def test_semantic_components_driver_guard_matches_distributed(
+    spark, monkeypatch
+):
     """The counted driver union–find and the distributed propagation
-    must produce identical components (forced via driver_pair_limit)."""
+    must produce identical components (forced via DRIVER_PAIR_LIMIT)."""
+    import spark_alchemy_spark.operators.dedup as dedup_mod
     from spark_alchemy_spark.operators.dedup import semantic_dedup_components
 
     corpus = _planted_corpus(spark)
@@ -260,13 +263,14 @@ def test_semantic_components_driver_guard_matches_distributed(spark):
     via_driver = {
         tuple(r)
         for r in semantic_dedup_components(
-            corpus, "vec_id", "embedding", driver_pair_limit=50_000, **kw
+            corpus, "vec_id", "embedding", **kw
         ).collect()
     }
+    monkeypatch.setattr(dedup_mod, "DRIVER_PAIR_LIMIT", 0)
     via_distributed = {
         tuple(r)
         for r in semantic_dedup_components(
-            corpus, "vec_id", "embedding", driver_pair_limit=0, **kw
+            corpus, "vec_id", "embedding", **kw
         ).collect()
     }
     assert via_driver == via_distributed and via_driver

@@ -6,6 +6,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from spark_alchemy_spark.functions import hll
 from spark_alchemy_spark.functions import sketches as S
 
 
@@ -105,7 +106,7 @@ def test_kll_row_merge_null_skip_and_exact(spark):
 def sketch_view(spark):
     """One sketch row per g: g=0 has every sketch, g=1 a NULL second
     theta and KLL sketch, g=2 only NULLs (all-NULL groups)."""
-    S.register_sql(spark)
+    hll.register(spark)
     raw = spark.createDataFrame(
         [
             (g, v if g < 2 else None, v if g == 0 else None)

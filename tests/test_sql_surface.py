@@ -117,8 +117,9 @@ def test_string_binary_type_tag(registered):
 
 
 def test_register_creates_exactly_the_reference_names(spark):
-    """register() adds the nine reference names plus agkn_cardinality,
-    and nothing else (temporary functions are per session)."""
+    """register() adds the nine reference names plus agkn_cardinality
+    and the seven theta/KLL names, and nothing else (temporary
+    functions are per session)."""
     session = spark.newSession()
     before = {f.name for f in session.catalog.listFunctions()}
     hll.register(session)
@@ -134,7 +135,53 @@ def test_register_creates_exactly_the_reference_names(spark):
         "hll_intersect_cardinality",
         "hll_convert",
         "agkn_cardinality",
+        "theta_cardinality",
+        "theta_union_row",
+        "theta_intersection_row",
+        "theta_difference_row",
+        "kll_row_merge",
+        "kll_quantile",
+        "kll_count",
     }
+
+
+@pytest.mark.parametrize(
+    "sql, first_line",
+    [
+        (
+            "SELECT hll_cardinality(id, id) FROM range(1)",
+            "hll_cardinality: hll_cardinality takes 1 arguments, got 2",
+        ),
+        (
+            "SELECT kll_quantile(kll_sketch_agg_double(CAST(id AS DOUBLE)))"
+            " FROM range(3)",
+            "kll_quantile: kll_quantile() missing 1 required positional"
+            " argument: 'rank'",
+        ),
+        (
+            "SELECT hll_init_agg(id, id) FROM range(3)",
+            "hll_init_agg: argument id must be a non-NULL literal",
+        ),
+        (
+            "SELECT hll_convert(hll_init_agg(id), 'DS', 'XYZ') FROM range(3)",
+            "hll_convert: Unknown sketch byte format 'XYZ'",
+        ),
+        (  # a JVM error inside the builder keeps its own message
+            "SELECT hll_init_agg(id, 1 / 0) FROM range(3)",
+            "hll_init_agg: [DIVIDE_BY_ZERO]",
+        ),
+    ],
+    ids=["arity", "missing_literal", "non_literal", "unknown_format", "jvm_error"],
+)
+def test_sql_builder_errors_name_the_function(registered, sql, first_line):
+    """A call the builder rejects fails at analysis with an
+    IllegalArgumentException whose first line names the SQL function,
+    not a py4j error about the ``sql`` call."""
+    from pyspark.errors import IllegalArgumentException
+
+    with pytest.raises(IllegalArgumentException) as info:
+        registered.sql(sql).collect()
+    assert str(info.value).splitlines()[0].startswith(first_line)
 
 
 NESTED_ROWS = [
